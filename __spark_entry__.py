@@ -88,24 +88,16 @@ _MODULES = [
 ]
 
 # The driver's correctness harness samples the FIRST 50 entries of
-# queries().  Since round 14 this window is DERIVED, not hand-counted
-# (the hand-maintained queue dropped its oldest block twice —
-# round-13 verdict #1): blocks (a)/(b) below are this round's
-# new/changed entries, and everything after them is the verbatim
-# output of
-#   python3 tools/staleness.py --emit (50 - _HAND_STAGED) --exclude <a+b names>
-# which unions every CORRECTNESS_r*.json and stages entries by their
-# LATEST fully-green driver round, oldest first, ties in current
-# driver order.  Re-running that command against the committed
-# artifacts must reproduce blocks (c..e) exactly —
-# tests/test_staleness_window.py asserts this on every run, so the
-# queue can never silently drop a block again.
-# _HAND_STAGED = how many leading window rows are this round's
-# hand-chosen new/changed block; everything after them through row 50
-# must be the staleness tool's output.
-_HAND_STAGED = 15
+# queries().  The window is DERIVED, not hand-counted (a hand-pasted
+# queue dropped its oldest block twice, and a pasted copy of the
+# staleness tool's output went stale whenever a new CORRECTNESS_r*.json
+# landed): the hand-staged block below holds this round's new/changed
+# entries, and the rest of the window is computed at import time by
+# tools/staleness.py, which unions every CORRECTNESS_r*.json and stages
+# entries by their LATEST fully-green CORRECTNESS round, oldest first,
+# ties in queries() order.  tests/test_staleness_window.py checks the result.
 _PRIORITY = [
-    # (a) implementation changed this ROUND-15 optimization round —
+    # implementation changed this ROUND-15 optimization round —
     # re-certify through the driver's oracle gate, riskiest rewrites
     # first (numpy candidate/verify passes, sink job-count cuts,
     # shared-substrate memos; every one is value-identical by parity
@@ -126,28 +118,42 @@ _PRIORITY = [
     "dedup_ngram_jaccard",        # memoized truth set
     "search_rank_rbo",            # legs memo
     "quality_ccnet_buckets",      # pinned bigram relation
-    # (b) verbatim output of
-    #   python3 tools/staleness.py --emit 35 --exclude <the 15 above>
-    # — never-checked first (none left), then ascending latest-green
-    # round (r7-era rows next)
-    "dsl_top_hits_by_type", "dsl_composite_after", "dsl_knn_query",
-    "dsl_search_after", "dsl_range_metrics", "dsl_week_histogram",
-    "dsl_terms_ordered", "qs_term_conjunction", "qs_spaced_comparison",
-    "qs_wildcard_terms", "qs_grouped_ranges", "qs_free_text",
-    "ann_pq_adc_topk", "ann_pq_rerank_topk", "stratified_split",
-    "source_overlap_matrix", "ts_interpolate_linear",
-    "ts_calendar_heatmap", "ts_ewma", "ts_downsample_lttb",
-    "ts_time_weighted_avg", "ts_state_agg", "bucket_correlation_agg",
-    "ts_seasonal_profile", "important_part_value",
-    "analyzer_custom_chain", "analyzer_edge_ngram_prefix",
-    "window_percent_rank", "fuzzy_name_join", "ppl_ad_zscore",
-    "ppl_dispersion_stats", "dsl_composite_desc", "dsl_nested_ordered",
-    "dsl_filters_metrics", "embedding_centroids",
 ]
+# how many leading window rows are hand-staged; the staleness tool
+# fills the rest of the 50
+_HAND_STAGED = len(_PRIORITY)
+_WINDOW = 50
 
-# Window accounting: (a)=15, (b)=35 — exactly 50. The round-16 queue
-# continues from tools/staleness.py output after these land in
-# CORRECTNESS_r15.
+
+def _merged(mapping_attr: str) -> dict:
+    merged: dict = {}
+    for m in _MODULES:
+        merged.update(getattr(m, mapping_attr))
+    return merged
+
+
+def _staleness_tail() -> list[str]:
+    """The window rows after the hand-staged block: the staleness
+    tool's staging order with the hand-staged names removed. Ties are
+    broken by the order with only the hand block placed first, which
+    is also the order the tail produces, so the result is stable."""
+    import importlib.util
+    import os
+
+    spec = importlib.util.spec_from_file_location(
+        "_staleness",
+        os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                     "tools", "staleness.py"),
+    )
+    tool = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tool)
+    hand = set(_PRIORITY)
+    order = _PRIORITY + [n for n in _merged("QUERIES") if n not in hand]
+    staged = [n for n, _ in tool.staging_order(order) if n not in hand]
+    return staged[: _WINDOW - _HAND_STAGED]
+
+
+_PRIORITY += _staleness_tail()
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -158,9 +164,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def _ordered(mapping_attr: str) -> dict:
-    merged: dict = {}
-    for m in _MODULES:
-        merged.update(getattr(m, mapping_attr))
+    merged = _merged(mapping_attr)
     out = {k: merged[k] for k in _PRIORITY if k in merged}
     out.update({k: v for k, v in merged.items() if k not in out})
     return out

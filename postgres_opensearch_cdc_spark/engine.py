@@ -37,6 +37,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from postgres_opensearch_cdc_spark.cdc.envelope import envelope_schema
+from postgres_opensearch_cdc_spark.parquet_dirs import read_parquet_dirs
 from postgres_opensearch_cdc_spark.sources.changelog import file_changelog_stream
 from postgres_opensearch_cdc_spark.streaming.apply import (
     MirrorSink,
@@ -1459,13 +1460,17 @@ class CdcEngine:
                     dirs.append(
                         os.path.join(base, "data", manifest["commit"])
                     )
+        # the log's schema is the monitor's result row shape: building
+        # it plans the search but runs no job, so neither does the read
+        spec = self.monitors[monitor_name]
+        empty = self._alert_row(
+            monitor_name,
+            self.search(spec["table"], spec["body"]).filter(F.lit(False)),
+            -1,
+        )
         if not dirs:
-            spec = self.monitors[monitor_name]
-            empty = self.search(spec["table"], spec["body"]).filter(
-                F.lit(False)
-            )
-            return self._alert_row(monitor_name, empty, -1)
-        return self.spark.read.parquet(*dirs)
+            return empty
+        return read_parquet_dirs(self.spark, empty.schema, dirs)
 
     def update(self, name: str, key, doc: dict,
                doc_as_upsert: bool = False) -> dict:

@@ -17,7 +17,9 @@ Scale paths:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F, types as T
+
+from postgres_opensearch_cdc_spark.parquet_dirs import read_parquet_dirs
 
 
 def _as_double(vec: Column) -> Column:
@@ -982,10 +984,12 @@ def ivfpq_index_build(
     tmp = os.path.join(path, "_ivfpq_meta.json.tmp")
     with open(tmp, "w") as fh:
         # id_type lets the empty-probe query path construct its empty
-        # result from a literal schema instead of listing the index
+        # result from a literal schema instead of listing the index;
+        # the codes schema lets a probe read skip footer inference
         json.dump({
             "by_residual": bool(by_residual),
             "id_type": vectors.schema[id_col].dataType.simpleString(),
+            "schema": coded.drop("_cell").schema.jsonValue(),
         }, fh)
     os.replace(tmp, os.path.join(path, "_ivfpq_meta.json"))
     tmp = os.path.join(path, "_ivf_centroids.json.tmp")
@@ -1014,7 +1018,7 @@ def ivfpq_index_append(
         codebook = json.load(fh)
     coded = _encoded_for_index(
         vectors, centroids, codebook, id_col, vec_col,
-        _ivfpq_by_residual(path),
+        _ivfpq_meta(path).get("by_residual", False),
     )
     if files_per_cell == 1:
         clustered = coded.repartition(F.col("_cell"))
@@ -1026,17 +1030,18 @@ def ivfpq_index_append(
     clustered.write.mode("append").partitionBy("_cell").parquet(path)
 
 
-def _ivfpq_by_residual(path: str) -> bool:
-    """Read the index's encoding mode; indexes written before the
-    residual option existed have no meta sidecar and are raw-encoded."""
+def _ivfpq_meta(path: str) -> dict:
+    """The index's build-time meta sidecar. Indexes written before it
+    existed have none: they are raw-encoded and record no id type or
+    codes schema, so callers fall back to reading the index."""
     import json
     import os
 
     meta_path = os.path.join(path, "_ivfpq_meta.json")
     if not os.path.exists(meta_path):
-        return False
+        return {}
     with open(meta_path) as fh:
-        return bool(json.load(fh).get("by_residual", False))
+        return json.load(fh)
 
 
 def ivfpq_index_topk(
@@ -1077,17 +1082,14 @@ def ivfpq_index_topk(
         c for c in ranked[:nprobe]
         if os.path.isdir(os.path.join(path, f"_cell={c}"))
     ]
+    meta = _ivfpq_meta(path)
     if not probe_cells:  # degenerate: all probed cells empty
         # literal empty frame — never list/read the index root: an
         # index built from zero vectors has no part files to infer
         # from, and a large index would list every partition just to
         # produce nothing. id type comes from the build-time sidecar
         # (legacy indexes without it fall back to the root read).
-        meta_path = os.path.join(path, "_ivfpq_meta.json")
-        id_type = None
-        if os.path.exists(meta_path):
-            with open(meta_path) as fh:
-                id_type = json.load(fh).get("id_type")
+        id_type = meta.get("id_type")
         if id_type is not None:
             return spark.createDataFrame(
                 [], f"{id_col} {id_type}, adc_dist double"
@@ -1098,7 +1100,16 @@ def ivfpq_index_topk(
         )
     m_count = len(codebook)
     dsub = len(codebook[0][0])
-    by_residual = _ivfpq_by_residual(path)
+    by_residual = meta.get("by_residual", False)
+
+    def cells_frame(cells: list[int]) -> DataFrame:
+        dirs = [os.path.join(path, f"_cell={c}") for c in cells]
+        if "schema" not in meta:  # legacy index: infer from footers
+            return spark.read.option("basePath", path).parquet(*dirs)
+        schema = T.StructType.fromJson(meta["schema"]).add(
+            "_cell", T.IntegerType()
+        )
+        return read_parquet_dirs(spark, schema, dirs, base_path=path)
 
     def lut_for(query: list[float]) -> list[list[float]]:
         return [
@@ -1121,19 +1132,14 @@ def ivfpq_index_topk(
         return df.select(F.col(id_col), F.round(score, 6).alias("adc_dist"))
 
     if not by_residual:
-        coded = spark.read.option("basePath", path).parquet(
-            *[os.path.join(path, f"_cell={c}") for c in probe_cells]
-        )
-        out = scored(coded, lut_for(query_vec))
+        out = scored(cells_frame(probe_cells), lut_for(query_vec))
     else:
         # residual codes: the query table is PER PROBED CELL (LUT over
         # q - centroid_c) — nprobe per-cell pruned scans, each with its
         # own constant-folded table, unioned before the heap finish
         parts = []
         for c in probe_cells:
-            cell_df = spark.read.option("basePath", path).parquet(
-                os.path.join(path, f"_cell={c}")
-            )
+            cell_df = cells_frame([c])
             q_res = [
                 float(x) - float(cc)
                 for x, cc in zip(query_vec, centroids[c])

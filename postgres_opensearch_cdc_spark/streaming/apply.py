@@ -22,10 +22,12 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 
 from postgres_opensearch_cdc_spark.cdc.envelope import OP_DELETE
+from postgres_opensearch_cdc_spark.parquet_dirs import read_parquet_dirs
 
 
 def _require_merge_columns(batch: DataFrame, key_cols, seq_cols, op_col) -> None:
@@ -401,8 +403,9 @@ class VersionedMirrorSink:
       * Data files are IMMUTABLE and written into a fresh commit dir per
         batch — never overwritten, never renamed. Only appends.
       * A manifest maps every live bucket to the commit dir holding its
-        current compacted contents. Readers resolve max(version)
-        manifest → file listing; they never list data dirs.
+        current compacted contents, and records the snapshot's schema.
+        Readers resolve max(version) manifest → the mapped bucket dirs;
+        they never list the data dir or a superseded commit.
       * The single manifest file write IS the commit point (a one-object
         PUT — atomic on S3/GCS; modeled locally by write-temp +
         os.replace). A crash anywhere before it leaves orphan data files
@@ -418,6 +421,15 @@ class VersionedMirrorSink:
     touched buckets' directories out of the manifest, which is file-level
     pruning without even a partition-filter scan. Old commits/manifests
     accumulate until vacuum() — time-travel for free until then.
+
+    Building a snapshot frame (read(), and the merge's touched-bucket
+    slice) launches no Spark job: the manifest's schema is passed to
+    the reader, so no footer is opened to infer one, and each commit's
+    bucket dirs are split into relations of at most
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` paths,
+    which Spark lists serially in-process instead of in a listing job
+    with one task per dir (a 64-bucket commit would cross the default 32).
+    The jobs start at the caller's action.
 
     Single-writer (one streaming query per mirror), like every
     foreachBatch sink; readers are lock-free and always consistent.
@@ -493,19 +505,24 @@ class VersionedMirrorSink:
     def _read_manifest_slice(
         self, spark: SparkSession, manifest: dict, buckets: list | None = None
     ) -> DataFrame | None:
+        """The manifest's snapshot (restricted to ``buckets``) with
+        ``_bucket`` as a partition column; None when no bucket is
+        mapped. Read with the manifest's schema, so commits written
+        before a schema evolution null-fill the added columns
+        (dynamic-mapping analogue) and no footer is opened to plan."""
         by_commit = self._bucket_paths(manifest, buckets)
-        dfs = [
-            spark.read.option("basePath", os.path.join(self._data_dir, cid)).parquet(*paths)
-            for cid, paths in sorted(by_commit.items())
-        ]
-        if not dfs:
+        if not by_commit:
             return None
-        out = dfs[0]
-        for d in dfs[1:]:
-            # commits written before a schema evolution lack the added
-            # columns — null-fill them on read (dynamic-mapping analogue)
-            out = out.unionByName(d, allowMissingColumns=True)
-        return out
+        schema = T.StructType.fromJson(manifest["schema"]).add(
+            "_bucket", T.IntegerType()
+        )
+        return reduce(DataFrame.union, [
+            read_parquet_dirs(
+                spark, schema, paths,
+                base_path=os.path.join(self._data_dir, cid),
+            )
+            for cid, paths in sorted(by_commit.items())
+        ])
 
     def read(self, spark: SparkSession, version: "int | None" = None) -> DataFrame:
         manifest = self.manifest(version)

@@ -20,7 +20,7 @@ import os
 
 import pytest
 
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as T
 
 from postgres_opensearch_cdc_spark.streaming.apply import VersionedMirrorSink
 
@@ -184,11 +184,172 @@ def test_equal_seq_replay_batch_row_wins(spark, sink):
     assert state == {2: "b2"}
 
 
+# -- explicit-schema, job-free snapshot reads --------------------------------
+
+
+def head_read(spark, sink, version=None):
+    """The snapshot as read before reads took the manifest's schema:
+    one footer-inferred relation per commit dir, unioned by name with
+    missing columns null-filled. The reference the new read must
+    match row for row."""
+    from functools import reduce
+
+    manifest = sink.manifest(version)
+    parts = [
+        spark.read.option(
+            "basePath", os.path.join(sink.path, "data", cid)
+        ).parquet(*paths)
+        for cid, paths in sorted(sink._bucket_paths(manifest).items())
+    ]
+    return reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
+    ).drop("_bucket")
+
+
+def rows_by_name(df, cols):
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+def jobs_launched(spark, fn):
+    """(fn(), number of Spark jobs fn launched). Counted by job group:
+    the status store keeps only the last spark.ui.retainedJobs jobs,
+    so a before/after size of the whole job list stops moving once a
+    long test session has run that many."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# A non-first apply_batch runs the touched-bucket stats collect and the
+# merge write, each a shuffle-map job plus a result job under AQE. The
+# slice read of the touched buckets adds none: it takes the manifest's
+# schema (no footer job) and lists at most the listing threshold of
+# dirs per relation serially in-process (no listing job).
+APPLY_BATCH_JOBS = 4
+
+
+def test_snapshot_reads_launch_no_jobs(spark, tmp_path):
+    """64 buckets over 3 commit dirs: view(), read(version=N) and a PIT
+    search build their frames without a Spark job, and a merge runs
+    only its own stats and write jobs."""
+    from postgres_opensearch_cdc_spark.engine import CdcEngine
+
+    engine = CdcEngine(spark=spark, workdir=str(tmp_path))
+    schema = "id long, status string"
+    engine.register_table("t", T.StructType.fromDDL(schema))
+    engine.bulk("t", [
+        {"index": {"id": i, "status": "A"}} for i in range(640)
+    ], batch_id=0)
+    engine.bulk("t", [
+        {"index": {"id": i, "status": "B"}} for i in range(0, 30, 3)
+    ], batch_id=1)
+    pit = engine.open_pit("t")
+    sink = engine.tables["t"].sink
+    _, jobs = jobs_launched(spark, lambda: sink.apply_batch(
+        spark.createDataFrame(
+            [("u", i, "C", 10_000 + i) for i in range(0, 50, 5)],
+            "op string, id long, status string, offset long",
+        ),
+        batch_id=2,
+    ))
+    assert jobs == APPLY_BATCH_JOBS
+    manifest = sink.latest_manifest()
+    assert len(manifest["buckets"]) == 64
+    assert len(set(manifest["buckets"].values())) >= 3
+
+    view, jobs = jobs_launched(spark, lambda: engine.view("t"))
+    assert jobs == 0
+    old, jobs = jobs_launched(spark, lambda: engine.view("t", version=2))
+    assert jobs == 0
+    body = {"pit": pit, "query": {"term": {"status": "B"}},
+            "sort": [{"id": {"order": "asc"}}], "size": 5}
+    page, jobs = jobs_launched(spark, lambda: engine.search("t", body))
+    assert jobs == 0
+
+    state = dict(view.select("id", "status").collect())
+    assert len(state) == 640
+    assert state[15] == "C" and state[3] == "B" and state[1] == "A"
+    assert rows_by_name(view, view.columns) == rows_by_name(
+        head_read(spark, sink), view.columns
+    )
+    assert dict(old.select("id", "status").collect())[15] == "B"
+    assert [r["id"] for r in page.collect()] == [0, 3, 6, 9, 12]
+
+
+def test_read_null_fills_commits_before_added_column(spark, sink):
+    sink.apply_batch(
+        chg(spark, [("c", i, f"v{i}", i) for i in range(40)]), batch_id=0
+    )
+    sink.apply_batch(
+        spark.createDataFrame(
+            [("u", i, f"w{i}", 100 + i, i * 10) for i in range(0, 40, 9)],
+            "op string, id long, v string, offset long, extra int",
+        ),
+        batch_id=1,
+    )
+    assert len(set(sink.latest_manifest()["buckets"].values())) == 2
+    got = sink.read(spark)
+    assert got.schema["extra"].dataType == T.IntegerType()
+    assert rows_by_name(got, got.columns) == rows_by_name(
+        head_read(spark, sink), got.columns
+    )
+    extra = dict(got.select("id", "extra").collect())
+    assert extra[9] == 90 and extra[1] is None
+
+    # time travel to before the column: that manifest's schema
+    v1 = sink.read(spark, version=1)
+    assert "extra" not in v1.columns
+    assert rows_by_name(v1, v1.columns) == rows_by_name(
+        head_read(spark, sink, version=1), v1.columns
+    )
+    assert dict(v1.select("id", "v").collect())[9] == "v9"
+
+
+def test_read_with_custom_bucket_expr(spark, tmp_path):
+    sink = VersionedMirrorSink(
+        path=str(tmp_path / "ranged"), key_cols=["id"],
+        seq_cols=["offset"], bucket_expr="id div 10",
+    )
+    sink.apply_batch(
+        chg(spark, [("c", i, f"v{i}", i) for i in range(50)]), batch_id=0
+    )
+    sink.apply_batch(
+        chg(spark, [("u", 12, "new", 100), ("d", 31, None, 101)]),
+        batch_id=1,
+    )
+    assert sorted(map(int, sink.latest_manifest()["buckets"])) == [
+        0, 1, 2, 3, 4
+    ]
+    got = sink.read(spark)
+    state = dict(got.select("id", "v").collect())
+    assert len(state) == 49 and state[12] == "new" and 31 not in state
+    assert rows_by_name(got, got.columns) == rows_by_name(
+        head_read(spark, sink), got.columns
+    )
+
+
 def test_empty_mirror_after_full_delete_readable(spark, sink):
+    """Every bucket emptied (by a batch that also adds a column): the
+    manifest maps no bucket, and the read is the manifest's schema
+    with no rows and no Spark job; the older version still reads."""
     sink.apply_batch(chg(spark, [("c", 1, "a", 1), ("c", 2, "b", 2)]), batch_id=0)
     sink.apply_batch(
-        chg(spark, [("d", 1, None, 10), ("d", 2, None, 11)]), batch_id=1
+        spark.createDataFrame(
+            [("d", 1, None, 10, None), ("d", 2, None, 11, None)],
+            "op string, id long, v string, offset long, extra int",
+        ),
+        batch_id=1,
     )
-    df = sink.read(spark)
+    assert sink.latest_manifest()["buckets"] == {}
+    df, jobs = jobs_launched(spark, lambda: sink.read(spark))
+    assert jobs == 0
+    assert df.columns == ["op", "id", "v", "offset", "extra"]
     assert df.count() == 0
-    assert "id" in df.columns and "v" in df.columns
+    assert sink.read(spark, version=1).count() == 2

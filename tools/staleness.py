@@ -17,12 +17,13 @@ entries entirely). This tool derives the queue from data instead:
 
 Usage:
     python3 tools/staleness.py            # human table + staging order
-    python3 tools/staleness.py --emit 50  # just the first N names,
-                                          # one per line (paste-ready)
+    python3 tools/staleness.py --emit 50  # just the first N names
 
-The round-N window should then be: (new/changed entries this round,
-hand-chosen) followed by this tool's staging order with those names
-removed. ``--exclude name1,name2`` does the removal.
+The window is (new/changed entries this round, hand-staged in
+``__spark_entry__.py``) followed by this tool's staging order with
+those names removed; ``__spark_entry__.py`` computes that tail from
+``staging_order()`` at import time, so nothing is pasted by hand.
+``--exclude name1,name2`` does the removal on the command line.
 """
 
 from __future__ import annotations
@@ -68,12 +69,17 @@ def latest_green() -> tuple[dict[str, int], list[str]]:
     return latest, red
 
 
-def staging_order() -> list[tuple[str, int | None]]:
+def staging_order(
+    order: list[str] | None = None,
+) -> list[tuple[str, int | None]]:
     """All current queries() entries as (name, latest_green_round or
-    None), in the order the next window should re-check them."""
-    import __spark_entry__ as entrymod
+    None), in the order the next window should re-check them. Ties
+    break by position in ``order`` (default: the current queries()
+    order)."""
+    if order is None:
+        import __spark_entry__ as entrymod
 
-    order = list(entrymod.queries())
+        order = list(entrymod.queries())
     pos = {n: i for i, n in enumerate(order)}
     latest, _ = latest_green()
     return sorted(
