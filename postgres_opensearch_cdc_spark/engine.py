@@ -40,8 +40,6 @@ from postgres_opensearch_cdc_spark.cdc.envelope import envelope_schema
 from postgres_opensearch_cdc_spark.parquet_dirs import read_parquet_dirs
 from postgres_opensearch_cdc_spark.sources.changelog import file_changelog_stream
 from postgres_opensearch_cdc_spark.streaming.apply import (
-    MirrorSink,
-    PartitionedMirrorSink,
     RollupSink,
     VersionedMirrorSink,
     start_mirror_stream,
@@ -52,7 +50,7 @@ from postgres_opensearch_cdc_spark.streaming.apply import (
 class TableHandle:
     name: str
     schema: T.StructType
-    sink: object  # VersionedMirrorSink | PartitionedMirrorSink | MirrorSink
+    sink: VersionedMirrorSink
     query: object | None = None  # StreamingQuery when live
 
 
@@ -62,17 +60,6 @@ class CdcEngine:
     workdir: str
     key_col: str = "id"
     seq_col: str = "offset"
-    # sink_mode picks the mirror realization:
-    #   "versioned"   (default) — bucket-partitioned, partition-pruned
-    #                 merges, object-store-safe commit-manifest protocol;
-    #                 merge cost O(|batch| + touched buckets). The only
-    #                 mode whose plan survives a 100 TB mirror, so the
-    #                 façade defaults to it.
-    #   "partitioned" — dynamic-partition-overwrite variant (local-FS
-    #                 semantics; kept for comparison benches, SCALE.md §2)
-    #   "simple"      — whole-mirror rewrite per batch; O(|mirror|). The
-    #                 logical/test form only — never for big mirrors.
-    sink_mode: str = "versioned"
     num_buckets: int = 64
     tables: dict[str, TableHandle] = field(default_factory=dict)
     aliases: dict[str, list[str]] = field(default_factory=dict)
@@ -155,31 +142,13 @@ class CdcEngine:
                 "merge sink's op-code column"
             )
         mirror_path = os.path.join(self.workdir, f"mirror_{name}")
-        if self.sink_mode == "versioned":
-            sink: object = VersionedMirrorSink(
-                path=mirror_path,
-                key_cols=[self.key_col],
-                seq_cols=[self.seq_col],
-                num_buckets=self.num_buckets,
-                bucket_expr=bucket_expr,
-            )
-        elif self.sink_mode == "partitioned":
-            sink = PartitionedMirrorSink(
-                path=mirror_path,
-                key_cols=[self.key_col],
-                seq_cols=[self.seq_col],
-                num_buckets=self.num_buckets,
-                bucket_expr=bucket_expr,
-            )
-        elif self.sink_mode == "simple":
-            sink = MirrorSink(
-                path=mirror_path, key_cols=[self.key_col], seq_cols=[self.seq_col]
-            )
-        else:
-            raise ValueError(
-                f"unknown sink_mode {self.sink_mode!r}: "
-                "use 'versioned', 'partitioned', or 'simple'"
-            )
+        sink = VersionedMirrorSink(
+            path=mirror_path,
+            key_cols=[self.key_col],
+            seq_cols=[self.seq_col],
+            num_buckets=self.num_buckets,
+            bucket_expr=bucket_expr,
+        )
         handle = TableHandle(name=name, schema=schema, sink=sink)
         self.tables[name] = handle
         self._rehydrate_knn_indexes(name)
@@ -265,7 +234,8 @@ class CdcEngine:
         reference consumer's actual shape (3 topics → 3 indices in one
         consumer, consumer.py:17-21) — routed by ``source.table``
         inside a single foreachBatch/checkpoint to each registered
-        mirror (the engine-façade form of MultiTableMirrorSink).
+        mirror. The batch is materialized once; each table's slice is
+        an independent keyed merge into its own mirror.
 
         The envelope parse uses the UNION of the routed tables'
         schemas (PERMISSIVE from_json null-fills fields absent from a
@@ -711,8 +681,8 @@ class CdcEngine:
         """The always-current mirror as a DataFrame. An alias resolves
         to the union of its member mirrors (missing columns
         null-filled — the multi-index dynamic-mapping behavior).
-        ``version`` time-travels a versioned-sink mirror to an older
-        committed manifest (snapshots are free until vacuum)."""
+        ``version`` time-travels the mirror to an older committed
+        manifest (snapshots are free until vacuum)."""
         if name in self.aliases:
             if version is not None:
                 raise ValueError("version applies to a single table, not an alias")
@@ -721,14 +691,7 @@ class CdcEngine:
             for d in dfs[1:]:
                 out = out.unionByName(d, allowMissingColumns=True)
             return out
-        sink = self.tables[name].sink
-        if version is not None:
-            if not isinstance(sink, VersionedMirrorSink):
-                raise ValueError(
-                    "time-travel requires the versioned sink_mode"
-                )
-            return sink.read(self.spark, version=version)
-        return sink.read(self.spark)
+        return self.tables[name].sink.read(self.spark, version=version)
 
     def search(self, name: str, body: dict,
                id_col: str | None = None) -> DataFrame:
@@ -1088,19 +1051,17 @@ class CdcEngine:
 
     def _seq_high_water(self, name: str):
         """Max sequence value EVER merged into the mirror — including
-        deletes, which are applied but not retained. The versioned
-        sink records it in each commit manifest (the durable form); the
-        other sink modes fall back to max(seq) over LIVE rows, which
-        can sit below an already-consumed stream offset after a
-        high-seq delete (documented replay hazard of the non-default
-        modes)."""
+        deletes, which are applied but not retained. Each commit
+        manifest records it (the durable form). A seq type JSON cannot
+        store (e.g. a timestamp) leaves no mark, and the fallback is
+        max(seq) over LIVE rows, which can sit below an already-consumed
+        stream offset after a high-seq delete."""
         handle = self.tables[name]
-        if isinstance(handle.sink, VersionedMirrorSink):
-            manifest = handle.sink.latest_manifest()
-            if manifest is not None:
-                hwm = (manifest.get("max_seq") or {}).get(self.seq_col)
-                if hwm is not None:
-                    return hwm
+        manifest = handle.sink.latest_manifest()
+        if manifest is not None:
+            hwm = (manifest.get("max_seq") or {}).get(self.seq_col)
+            if hwm is not None:
+                return hwm
         if handle.sink.exists():
             return self.view(name).agg(F.max(self.seq_col)).head()[0]
         return None
@@ -1262,8 +1223,6 @@ class CdcEngine:
         analog. Returns {"id": "<table>:<version>"}; put it in the
         request body as {"pit": {"id": ...}}."""
         handle = self.tables[name]  # aliases/unknown raise KeyError
-        if not isinstance(handle.sink, VersionedMirrorSink):
-            raise ValueError("point-in-time requires the versioned sink_mode")
         manifest = handle.sink.latest_manifest()
         if manifest is None:
             raise ValueError(f"table {name!r} has no committed version yet")
@@ -1556,20 +1515,13 @@ class CdcEngine:
         import json
 
         handle = self.tables[name]
-        if version is not None and not isinstance(handle.sink, VersionedMirrorSink):
-            raise ValueError("explicit version requires the versioned sink_mode")
         df = self.view(name, version=version)
         df.write.parquet(os.path.join(dest, "data"))
-        max_seq: dict = {}
-        src_version = version
-        if isinstance(handle.sink, VersionedMirrorSink):
-            manifest = handle.sink.manifest(version)
-            max_seq = manifest.get("max_seq") or {}
-            src_version = manifest["version"]
+        manifest = handle.sink.manifest(version)
         info = {
             "source_table": name,
-            "source_version": src_version,
-            "max_seq": max_seq,
+            "source_version": manifest["version"],
+            "max_seq": manifest.get("max_seq") or {},
             "key_col": self.key_col,
             "seq_col": self.seq_col,
             "registered_schema": json.loads(handle.schema.json()),
@@ -1606,7 +1558,7 @@ class CdcEngine:
         handle = self.register_table(as_name, schema)
         rows = self.spark.read.parquet(os.path.join(path, "data"))
         handle.sink.apply_batch(rows, batch_id=-1)
-        if isinstance(handle.sink, VersionedMirrorSink) and info["max_seq"]:
+        if info["max_seq"]:
             handle.sink.raise_high_water(info["max_seq"])
         return handle
 
@@ -1654,9 +1606,9 @@ class CdcEngine:
 
     def cat_indices(self) -> list[dict]:
         """The ``_cat/indices`` analog: one row per mirror with live
-        doc count, bytes on disk (live data files only for the
-        versioned sink — old un-vacuumed commits excluded, matching
-        the 'primary store size' reading), committed version, and the
+        doc count, bytes on disk (live data files only — old
+        un-vacuumed commits excluded, matching the 'primary store
+        size' reading), committed version, and the
         sequence high-water mark. Aliases are listed with their
         member resolution, like ES's alias cat endpoint."""
         out = []
@@ -1668,31 +1620,17 @@ class CdcEngine:
                 continue
             row: dict = {"index": name, "status": "open",
                          "docs_count": self.view(name).count()}
-            sink = handle.sink
-            if isinstance(sink, VersionedMirrorSink):
-                manifest = sink.latest_manifest()
-                data_dir = sink._data_dir
-                live = 0
-                for b, cid in manifest["buckets"].items():
-                    d = os.path.join(data_dir, cid, f"_bucket={b}")
-                    for dp, _, fs in os.walk(d):
-                        live += sum(
-                            os.path.getsize(os.path.join(dp, f)) for f in fs
-                        )
-                row["store_bytes"] = live
-                row["version"] = manifest["version"]
-                row["max_seq"] = (manifest.get("max_seq") or {}).get(
-                    self.seq_col
-                )
-            else:
-                size = 0
-                for dp, _, fs in os.walk(sink.path):
-                    size += sum(
+            manifest = handle.sink.latest_manifest()
+            live = 0
+            for b, cid in manifest["buckets"].items():
+                d = os.path.join(handle.sink._data_dir, cid, f"_bucket={b}")
+                for dp, _, fs in os.walk(d):
+                    live += sum(
                         os.path.getsize(os.path.join(dp, f)) for f in fs
                     )
-                row["store_bytes"] = size
-                row["version"] = None
-                row["max_seq"] = None
+            row["store_bytes"] = live
+            row["version"] = manifest["version"]
+            row["max_seq"] = (manifest.get("max_seq") or {}).get(self.seq_col)
             out.append(row)
         for alias, members in sorted(self.aliases.items()):
             out.append({"index": alias, "status": "alias",

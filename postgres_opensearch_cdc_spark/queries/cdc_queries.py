@@ -184,8 +184,7 @@ def engine_search_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mirror). Production sizes buckets to the 128 MB-1 GB file band.
     eng = CdcEngine(
         spark, tempfile.mkdtemp(prefix="engine_mirror_"),
-        key_col="key", seq_col="event_id", sink_mode="versioned",
-        num_buckets=16,
+        key_col="key", seq_col="event_id", num_buckets=16,
     )
     handle = eng.register_table(
         "user_state",
@@ -238,8 +237,7 @@ def engine_snapshot_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     workdir = tempfile.mkdtemp(prefix="engine_dr_")
     eng = CdcEngine(
-        spark, workdir, key_col="key", seq_col="event_id",
-        sink_mode="versioned", num_buckets=16,
+        spark, workdir, key_col="key", seq_col="event_id", num_buckets=16,
     )
     handle = eng.register_table(
         "user_state",
@@ -379,8 +377,7 @@ def _events_engine(spark: SparkSession, sf_dir: str, prefix: str):
     )
     eng = CdcEngine(
         spark, tempfile.mkdtemp(prefix=prefix),
-        key_col="key", seq_col="event_id", sink_mode="versioned",
-        num_buckets=16,
+        key_col="key", seq_col="event_id", num_buckets=16,
     )
     handle = eng.register_table(
         "user_state",

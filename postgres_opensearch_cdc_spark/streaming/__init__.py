@@ -2,7 +2,7 @@
 (consumer.py:53-119) re-expressed as checkpointed micro-batch streaming."""
 
 from postgres_opensearch_cdc_spark.streaming.apply import (  # noqa: F401
-    MirrorSink,
+    VersionedMirrorSink,
     start_mirror_stream,
     windowed_event_counts,
     sessionized_counts,

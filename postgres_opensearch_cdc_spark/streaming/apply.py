@@ -21,7 +21,7 @@ capabilities the reference lacks; Spark-native extensions).
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
@@ -43,118 +43,9 @@ def _require_merge_columns(batch: DataFrame, key_cols, seq_cols, op_col) -> None
         )
 
 
-@dataclass
-class MirrorSink:
-    """Parquet-backed keyed mirror maintained by idempotent merge.
-
-    The merge is pure-Spark (no Delta dependency): read current mirror,
-    union the batch as changes, last-write-wins compact, write back.
-    For a production 100 TB mirror, the same foreachBatch body targets a
-    Delta/Iceberg MERGE INTO (partitioned by key bucket so only touched
-    files rewrite); the logical semantics — and these tests — are
-    identical.
-    """
-
-    path: str
-    key_cols: list[str]
-    seq_cols: list[str]
-    op_col: str = "op"
-    batches_applied: int = field(default=0)
-
-    def _heal_swap(self) -> None:
-        """Recover an interrupted write-swap: a crash between the two
-        renames leaves the previous mirror at ``<path>.old`` and no
-        current mirror — restore it (the batch replays idempotently)."""
-        old = self.path + ".old"
-        if not os.path.exists(
-            os.path.join(self.path, "_SUCCESS")
-        ) and os.path.exists(os.path.join(old, "_SUCCESS")):
-            os.rename(old, self.path)
-
-    def exists(self) -> bool:
-        self._heal_swap()
-        return os.path.exists(os.path.join(self.path, "_SUCCESS"))
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        self._heal_swap()
-        return spark.read.parquet(self.path)
-
-    def apply_batch(self, batch: DataFrame, batch_id: int,
-                    writer_id: str | None = None) -> None:
-        """foreachBatch body. Idempotent under batch replay: replaying a
-        batch re-merges the same (key, seq) rows, and last-write-wins on
-        the same sequence numbers is a no-op — the reference's
-        PUT-by-id idempotency (consumer.py:64-68), ST5.
-        ``writer_id`` identifies the streaming query (checkpoint) for
-        sinks with a replay guard; this sink's idempotence is value-
-        level, so it only accepts the argument for interface parity.
-
-        Contract (ST2): a key's events must not go BACKWARD across
-        micro-batches — deletes are applied (key removed), not retained
-        as tombstones, so an older update arriving after the delete's
-        batch would resurrect the row. Kafka/Kinesis per-partition
-        ordering provides this; within a batch any order is fine, and
-        replays/duplicates are always safe. (Retained-tombstone mode
-        would lift the constraint at the cost of a tombstone-compaction
-        job; the reference has the identical semantics via immediate
-        DELETE-by-id, consumer.py:93-100.)"""
-        _require_merge_columns(
-            batch, self.key_cols, self.seq_cols, self.op_col
-        )
-        spark = batch.sparkSession
-        # _pri breaks seq ties deterministically: an incoming batch row
-        # (1) beats the mirrored row (0) at equal seq, so a replayed
-        # backfill where both sides carry seq=-1 resolves identically
-        # every run (plan-independent), including op='d' vs mirrored 'u'.
-        w = Window.partitionBy(*self.key_cols).orderBy(
-            *[F.col(c).desc_nulls_last() for c in self.seq_cols],
-            F.col("_pri").desc(),
-        )
-        if self.exists():
-            current = self.read(spark)
-            as_changes = current.select(
-                F.lit("u").alias(self.op_col),
-                *[F.col(c) for c in current.columns if c != self.op_col],
-            ).withColumn("_pri", F.lit(0))
-            # schema-evolving merge: a column added upstream (ALTER TABLE
-            # ADD COLUMN) appears on new rows and null-fills the mirror
-            # history; a column absent from this batch null-fills the
-            # batch side — the sink analogue of dynamic mapping
-            # (reference W5: new fields indexed on arrival, old docs
-            # return null)
-            unioned = batch.withColumn("_pri", F.lit(1)).unionByName(
-                as_changes, allowMissingColumns=True
-            )
-        else:
-            unioned = batch.withColumn("_pri", F.lit(1))
-        merged = (
-            unioned.withColumn("_rn", F.row_number().over(w))
-            .filter((F.col("_rn") == 1) & (F.col(self.op_col) != OP_DELETE))
-            .drop("_rn", "_pri")
-        )
-        # ONE job instead of two: write to a sibling tmp dir (the plan
-        # still reads the current mirror lazily — different path, so no
-        # read-overwrite hazard and no localCheckpoint materialization
-        # pass), then swap directories. Crash-safety is strictly better
-        # than overwrite-in-place: the old mirror stays intact until
-        # the new one is fully written, and _heal_swap restores it if
-        # the process dies between the two renames.
-        import shutil
-
-        tmp, old = self.path + ".tmpw", self.path + ".old"
-        shutil.rmtree(tmp, ignore_errors=True)
-        merged.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.exists(self.path):
-            os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        shutil.rmtree(old, ignore_errors=True)
-        self.batches_applied += 1
-
-
 def start_mirror_stream(
     changes: DataFrame,
-    sink: MirrorSink,
+    sink: VersionedMirrorSink,
     checkpoint_dir: str,
     trigger_available_now: bool = True,
     processing_time: str = "1 second",
@@ -193,205 +84,12 @@ def start_mirror_stream(
 
 
 @dataclass
-class PartitionedMirrorSink:
-    """Bucket-partitioned mirror with partition-pruned merges — the
-    plain-parquet realization of "MERGE touches only affected files"
-    (what Delta/Iceberg would give us; SURVEY W1 scale note).
-
-    Layout: mirror partitioned by `_bucket = pmod(xxhash64(key), n)`.
-    Applying a batch:
-      1. bucket the batch rows,
-      2. read ONLY those buckets of the mirror (partition pruning —
-         cheap regardless of total mirror size),
-      3. last-write-wins compact batch ∪ touched-slice,
-      4. dynamic-partition-overwrite: Spark rewrites exactly the
-         partitions present in the output; untouched buckets are never
-         read or written.
-
-    Merge cost therefore scales with |batch| + |touched buckets|, not
-    |mirror| — the property that makes a 100 TB mirror maintainable at
-    a 1k-events/s trickle. Verified (untouched partition files remain
-    byte-identical) in tests/test_partitioned_mirror.py.
-    """
-
-    path: str
-    key_cols: list[str]
-    seq_cols: list[str]
-    op_col: str = "op"
-    num_buckets: int = 64
-    bucket_expr: str | None = None
-
-    def _bucket(self) -> "F.Column":
-        """Bucketing strategy decides WHEN pruning pays (measured in
-        SCALE.md §2):
-
-        - hash (default): co-locates joins, but a batch of random keys
-          touches ~min(|batch|, num_buckets) buckets — pruning only
-          helps when batches are small relative to bucket count.
-        - range (`bucket_expr`, e.g. "id div 100000"): clustered update
-          keys (monotonic PKs, hot recent entities — the common CDC
-          shape) land in few buckets → merges rewrite a sliver of the
-          mirror regardless of mirror size.
-        """
-        if self.bucket_expr is not None:
-            return F.expr(self.bucket_expr)
-        return F.pmod(F.xxhash64(*[F.col(c) for c in self.key_cols]), F.lit(self.num_buckets))
-
-    def exists(self) -> bool:
-        # dynamic-overwrite commits do NOT write a root _SUCCESS marker —
-        # presence of any bucket partition directory is the real signal
-        if not os.path.isdir(self.path):
-            return False
-        return any(e.startswith("_bucket=") for e in os.listdir(self.path))
-
-    # -- schema sidecar -------------------------------------------------
-    # Partition-pruned merges leave MIXED-schema bucket files after a
-    # schema evolution (only touched buckets carry the new column).
-    # mergeSchema handles that, but it runs a footer-merge job over
-    # every file it reads ON EVERY BATCH — O(|mirror|) plan-time work
-    # that defeats the pruning this sink exists for. Instead the sink
-    # persists the running column superset (what unionByName produced)
-    # in a root-level sidecar after each write and reads with that
-    # EXPLICIT schema: zero footer jobs, files missing a column yield
-    # nulls, plan cost independent of mirror size. The sidecar sits
-    # outside the _bucket= partition dirs so dynamic overwrite never
-    # touches it; mirrors written before the sidecar existed fall back
-    # to mergeSchema once and gain the sidecar on their next write.
-
-    def _schema_path(self) -> str:
-        return os.path.join(self.path, "_mirror_schema.json")
-
-    def _stored_schema(self) -> "T.StructType | None":
-        import json
-
-        try:
-            with open(self._schema_path()) as fh:
-                return T.StructType.fromJson(json.load(fh))
-        except (OSError, ValueError, KeyError):
-            return None
-
-    def _store_schema(self, schema: "T.StructType") -> None:
-        import json
-
-        # sidecar now precedes the first data write — the mirror dir
-        # may not exist yet
-        os.makedirs(self.path, exist_ok=True)
-        tmp = self._schema_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(schema.jsonValue(), fh)
-        os.replace(tmp, self._schema_path())  # atomic on POSIX
-
-    def _reader(self, spark: SparkSession):
-        stored = self._stored_schema()
-        reader = spark.read.option("basePath", self.path)
-        if stored is not None:
-            return reader.schema(stored)
-        return reader.option("mergeSchema", "true")
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        return self._reader(spark).parquet(self.path).drop("_bucket")
-
-    def apply_batch(self, batch: DataFrame, batch_id: int,
-                    writer_id: str | None = None) -> None:
-        _require_merge_columns(
-            batch, self.key_cols, self.seq_cols, self.op_col
-        )
-        spark = batch.sparkSession
-        batch = batch.withColumn("_bucket", self._bucket())
-        existed = self.exists()
-        touched: list = []
-        current = None
-        if existed:
-            touched = [
-                r["_bucket"]
-                for r in batch.select("_bucket").distinct().collect()
-            ]
-            # list only touched bucket DIRECTORIES (basePath keeps
-            # _bucket as a partition column) and read them with the
-            # sidecar schema — scan AND schema resolution are both
-            # O(|touched buckets|), no whole-mirror footer sweep.
-            # Buckets new in this batch have no directory yet and
-            # are skipped (nothing to merge).
-            touched_dirs = [
-                p for b in touched
-                if os.path.isdir(p := f"{self.path}/_bucket={b}")
-            ]
-            current = (
-                self._reader(spark)
-                .parquet(*touched_dirs)
-                .filter(F.col("_bucket").isin(touched))
-            ) if touched_dirs else None
-        if current is not None:
-            as_changes = current.select(
-                F.lit("u").alias(self.op_col),
-                *[F.col(c) for c in current.columns if c != self.op_col],
-            ).withColumn("_pri", F.lit(0))
-            # schema-evolving merge (see MirrorSink.apply_batch)
-            unioned = batch.withColumn("_pri", F.lit(1)).unionByName(
-                as_changes, allowMissingColumns=True
-            )
-        else:
-            unioned = batch.withColumn("_pri", F.lit(1))
-        # batch rows (_pri=1) beat mirrored rows (0) at equal seq —
-        # deterministic replay resolution (see MirrorSink.apply_batch)
-        w = Window.partitionBy(*self.key_cols).orderBy(
-            *[F.col(c).desc_nulls_last() for c in self.seq_cols],
-            F.col("_pri").desc(),
-        )
-        merged = (
-            unioned.withColumn("_rn", F.row_number().over(w))
-            .filter((F.col("_rn") == 1) & (F.col(self.op_col) != OP_DELETE))
-            .drop("_rn", "_pri")
-        )
-        # persist the running column superset (unionByName already
-        # folded any evolved columns in) BEFORE the data write — next
-        # batch plans with it instead of sweeping footers; _bucket
-        # stays a discovered partition column. Order matters: a crash
-        # between sidecar and data write leaves a sidecar listing a
-        # column the files lack, which is benign (explicit-schema
-        # reads null-fill it); the reverse order risked a sidecar
-        # MISSING an evolved column, silently dropping it on every
-        # later read and merge.
-        self._store_schema(merged.drop("_bucket").schema)
-        # ONE job instead of two (and no dynamic-overwrite conf dance):
-        # write the merged buckets to a sibling tmp dir — the plan still
-        # reads the live bucket dirs lazily, different path, so no
-        # read-overwrite hazard and no localCheckpoint materialization
-        # pass — then swap the produced bucket dirs into place. A
-        # touched bucket whose keys were all deleted produces no tmp
-        # dir and is dropped, matching the old explicit cleanup; the
-        # produced-bucket set comes from a dir listing, replacing the
-        # second distinct().collect() job the old form paid.
-        import shutil
-
-        tmp = self.path + ".tmpw"
-        shutil.rmtree(tmp, ignore_errors=True)
-        merged.write.mode("overwrite").partitionBy("_bucket").parquet(tmp)
-        out_buckets = {
-            d.split("=", 1)[1]
-            for d in os.listdir(tmp)
-            if d.startswith("_bucket=")
-        }
-        os.makedirs(self.path, exist_ok=True)
-        for b in out_buckets:
-            dst = os.path.join(self.path, f"_bucket={b}")
-            shutil.rmtree(dst, ignore_errors=True)
-            os.rename(os.path.join(tmp, f"_bucket={b}"), dst)
-        for b in {str(b) for b in touched} - out_buckets:
-            shutil.rmtree(
-                os.path.join(self.path, f"_bucket={b}"), ignore_errors=True
-            )
-        # the tmp write's _SUCCESS marker becomes the mirror's
-        open(os.path.join(self.path, "_SUCCESS"), "w").close()
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-@dataclass
 class VersionedMirrorSink:
-    """Object-store-safe partitioned mirror: the commit-marker protocol
-    form of PartitionedMirrorSink (which relies on dynamic partition
-    overwrite + a local-FS directory delete — non-atomic on object
-    stores, SURVEY W1 scale note).
+    """The engine's keyed mirror: a bucket-partitioned parquet table
+    maintained by partition-pruned, last-write-wins merges and published
+    through commit manifests, so it is safe on object stores (no
+    directory rename or delete is ever part of a commit; SURVEY W1
+    scale note).
 
     Snapshot layout (mini table-format, Iceberg-style but dependency
     free):
@@ -416,11 +114,14 @@ class VersionedMirrorSink:
         manifest's batch_id (exactly-once commit, stronger than the
         merge's last-write-wins idempotency which still backstops it).
 
-    Merge cost is |batch| + |touched bucket slices| exactly like
-    PartitionedMirrorSink — the pruning now happens by reading only the
-    touched buckets' directories out of the manifest, which is file-level
-    pruning without even a partition-filter scan. Old commits/manifests
-    accumulate until vacuum() — time-travel for free until then.
+    Merge cost is |batch| + |touched bucket slices|, not |mirror|: only
+    the touched buckets' directories are read, straight out of the
+    manifest, which is file-level pruning without even a
+    partition-filter scan. The bucket is ``pmod(xxhash64(key),
+    num_buckets)`` by default; a range ``bucket_expr`` (e.g.
+    ``"id div 100000"``) keeps clustered update keys in few buckets
+    (SCALE.md §2). Old commits/manifests accumulate until vacuum() —
+    time-travel for free until then.
 
     Building a snapshot frame (read(), and the merge's touched-bucket
     slice) launches no Spark job: the manifest's schema is passed to
@@ -536,6 +237,20 @@ class VersionedMirrorSink:
 
     def apply_batch(self, batch: DataFrame, batch_id: int,
                     writer_id: str | None = None) -> None:
+        """foreachBatch body: merge one changelog batch and commit it.
+        ``writer_id`` identifies the streaming query (its checkpoint);
+        a replayed ``(writer_id, batch_id)`` is skipped whole, and the
+        last-write-wins merge on (key, seq) makes any other replay a
+        no-op too — the reference's PUT-by-id idempotency
+        (consumer.py:64-68), ST5.
+
+        Contract (ST2): a key's events must not go BACKWARD across
+        micro-batches — deletes are applied (key removed), not retained
+        as tombstones, so an older update arriving after the delete's
+        batch would resurrect the row. Kafka/Kinesis per-partition
+        ordering provides this; within a batch any order is fine (the
+        reference has the same semantics via immediate DELETE-by-id,
+        consumer.py:93-100)."""
         _require_merge_columns(
             batch, self.key_cols, self.seq_cols, self.op_col
         )
@@ -624,14 +339,20 @@ class VersionedMirrorSink:
                     .withColumn("_bucket", self._bucket())
                     .withColumn("_pri", F.lit(0))
                 )
-                # schema-evolving merge (see MirrorSink.apply_batch)
+                # schema-evolving merge: a column added upstream (ALTER
+                # TABLE ADD COLUMN) appears on new rows and null-fills
+                # the mirrored slice; a column absent from this batch
+                # null-fills the batch side — the sink analogue of
+                # dynamic mapping (reference W5)
                 unioned = batch.withColumn("_pri", F.lit(1)).unionByName(
                     as_changes, allowMissingColumns=True
                 )
         if "_pri" not in unioned.columns:
             unioned = unioned.withColumn("_pri", F.lit(1))
-        # batch rows (_pri=1) beat mirrored rows (0) at equal seq —
-        # deterministic replay resolution (see MirrorSink.apply_batch)
+        # _pri breaks seq ties deterministically: a batch row (1) beats
+        # the mirrored row (0) at equal seq, so a replayed backfill where
+        # both sides carry seq=-1 resolves identically every run
+        # (plan-independent), including op='d' vs a mirrored 'u'
         w = Window.partitionBy(*self.key_cols).orderBy(
             *[F.col(c).desc_nulls_last() for c in self.seq_cols],
             F.col("_pri").desc(),
@@ -738,33 +459,6 @@ class VersionedMirrorSink:
                     shutil.rmtree(os.path.join(self._data_dir, e))
                     removed += 1
         return removed
-
-
-@dataclass
-class MultiTableMirrorSink:
-    """Routed multi-table apply: one changelog stream carrying events for
-    several tables (the reference consumes 3 topics into 3 indices,
-    consumer.py:17-21) fans out to one keyed mirror per table inside a
-    single foreachBatch.
-
-    The batch is partitioned by routing key (source table name) and each
-    slice merges into its own mirror — same per-table semantics as
-    MirrorSink, one stream, one checkpoint. Routing-key slices are
-    independent writes; a production version runs them as concurrent
-    MERGEs on a table format."""
-
-    sinks: dict[str, MirrorSink]
-    route_col: str = "target_table"
-
-    def apply_batch(self, batch: DataFrame, batch_id: int,
-                    writer_id: str | None = None) -> None:
-        # merge-column validation happens in each routed per-table sink
-        batch = batch.localCheckpoint(eager=True)  # materialize once, slice many
-        for table, sink in self.sinks.items():
-            slice_df = batch.filter(F.col(self.route_col) == table).drop(self.route_col)
-            if slice_df.isEmpty():
-                continue
-            sink.apply_batch(slice_df, batch_id, writer_id=writer_id)
 
 
 # ---------------------------------------------------------------------------

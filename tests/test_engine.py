@@ -36,9 +36,8 @@ def envelope(op, rid, status, ctype, offset):
 import pytest
 
 
-@pytest.mark.parametrize("sink_mode", ["versioned", "partitioned", "simple"])
-def test_full_lifecycle(spark, tmp_path, sink_mode):
-    engine = CdcEngine(spark=spark, workdir=str(tmp_path), sink_mode=sink_mode)
+def test_full_lifecycle(spark, tmp_path):
+    engine = CdcEngine(spark=spark, workdir=str(tmp_path))
     engine.register_table("card", CARD_SCHEMA)
 
     # snapshot: 3 cards
@@ -263,12 +262,11 @@ def test_engine_msearch_and_explain(spark, tmp_path):
     assert "Physical Plan" in plan and "ACTIVE" in plan
 
 
-@pytest.mark.parametrize("sink_mode", ["versioned", "partitioned"])
-def test_engine_maintenance_apis(spark, tmp_path, sink_mode):
+def test_engine_maintenance_apis(spark, tmp_path):
     """_count / _delete_by_query / _update_by_query: maintenance flows
     expressed as keyed-merge batches (never rewrite-in-place), so they
     compose with streaming and replay idempotently."""
-    engine = CdcEngine(spark=spark, workdir=str(tmp_path), sink_mode=sink_mode)
+    engine = CdcEngine(spark=spark, workdir=str(tmp_path))
     engine.register_table("card", CARD_SCHEMA)
     engine.backfill("card", spark.createDataFrame(
         [(i, "ACTIVE" if i % 2 else "BLOCKED", "DEBIT") for i in range(1, 11)],
@@ -713,6 +711,9 @@ def test_engine_routed_multi_table_stream(spark, tmp_path):
     assert engine.view("card").head()["status"] == "BLOCKED"
     txn = engine.view("txn").head()
     assert (txn["id"], txn["amount"], txn["status"]) == (11, 9.0, "SETTLED")
+    # per-table isolation: the union parse's columns don't leak across
+    assert "amount" not in engine.view("card").columns
+    assert "card_type" not in engine.view("txn").columns
     # the routed mirrors serve the full search surface
     hits = engine.search("txn", {"query": {"range": {"amount": {"lt": 10}}}})
     assert [r["id"] for r in hits.collect()] == [11]

@@ -1,6 +1,7 @@
 """Routed multi-table streaming apply (reference: 3 topics → 3 indices
-in one consumer, consumer.py:17-21) + stream-static and stream-stream
-joins (Spark-native extensions)."""
+in one consumer, consumer.py:17-21) through the engine's
+start_routed_stream, + stream-static and stream-stream joins
+(Spark-native extensions)."""
 
 from __future__ import annotations
 
@@ -9,11 +10,7 @@ import os
 
 from pyspark.sql import functions as F, types as T
 
-from postgres_opensearch_cdc_spark.sources.changelog import file_changelog_stream
-from postgres_opensearch_cdc_spark.streaming.apply import (
-    MirrorSink,
-    MultiTableMirrorSink,
-)
+from postgres_opensearch_cdc_spark.engine import CdcEngine
 
 ROW_SCHEMA = T.StructType(
     [T.StructField("id", T.LongType()), T.StructField("status", T.StringType())]
@@ -35,6 +32,8 @@ def envelope(op, rid, status, offset, table):
 
 
 def test_multitable_routing(spark, tmp_path):
+    """Both tables use key 1: a delete routed to one table must leave
+    the other table's row with the same key in place."""
     src = str(tmp_path / "log")
     os.makedirs(src)
     lines = [
@@ -47,29 +46,17 @@ def test_multitable_routing(spark, tmp_path):
     with open(os.path.join(src, "b.json"), "w") as f:
         f.write("\n".join(lines))
 
-    sinks = {
-        t: MirrorSink(path=str(tmp_path / f"mirror_{t}"), key_cols=["id"], seq_cols=["offset"])
-        for t in ["card", "authorize_transaction"]
-    }
-    multi = MultiTableMirrorSink(sinks=sinks)
-    stream = file_changelog_stream(spark, src, ROW_SCHEMA)
-    flat = stream.select(
-        "op",
-        F.col("source.table").alias("target_table"),
-        F.coalesce(F.col("after.id"), F.col("before.id")).alias("id"),
-        F.col("after.status").alias("status"),
-        "offset",
-    )
-    q = (
-        flat.writeStream.foreachBatch(multi.apply_batch)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    engine = CdcEngine(spark=spark, workdir=str(tmp_path / "engine"))
+    for t in ["card", "authorize_transaction"]:
+        engine.register_table(t, ROW_SCHEMA)
+    engine.start_routed_stream(src)
+    engine.await_all()
 
-    card = {r["id"]: r["status"] for r in sinks["card"].read(spark).collect()}
-    txn = {r["id"]: r["status"] for r in sinks["authorize_transaction"].read(spark).collect()}
+    card = {r["id"]: r["status"] for r in engine.view("card").collect()}
+    txn = {
+        r["id"]: r["status"]
+        for r in engine.view("authorize_transaction").collect()
+    }
     assert card == {1: "CARD_B"}
     assert txn == {2: "TXN_B"}  # id 1 deleted
 

@@ -53,7 +53,10 @@ def test_route_topics_maps_and_nulls_unknown(spark):
 
 def test_op_stats_listener_collects_observed_metrics(spark, tmp_path):
     from postgres_opensearch_cdc_spark.sources.changelog import file_changelog_stream
-    from postgres_opensearch_cdc_spark.streaming.apply import MirrorSink, start_mirror_stream
+    from postgres_opensearch_cdc_spark.streaming.apply import (
+        VersionedMirrorSink,
+        start_mirror_stream,
+    )
 
     row_schema = T.StructType(
         [T.StructField("id", T.LongType()), T.StructField("status", T.StringType())]
@@ -77,7 +80,7 @@ def test_op_stats_listener_collects_observed_metrics(spark, tmp_path):
             F.col("after.status").alias("status"),
             "offset",
         )
-        sink = MirrorSink(
+        sink = VersionedMirrorSink(
             path=str(tmp_path / "mirror"), key_cols=["id"], seq_cols=["offset"]
         )
         q = start_mirror_stream(flat, sink, str(tmp_path / "ckpt"))

@@ -1,17 +1,19 @@
-"""PartitionedMirrorSink: merge correctness + the partition-pruning
-contract — untouched bucket files must remain byte-identical after a
-merge, and fully-deleted buckets disappear."""
+"""VersionedMirrorSink with range buckets (a ``bucket_expr`` over the
+key, the layout bench.py's range merge measures): merge correctness and
+the partition-pruning contract — untouched buckets' files stay
+byte-identical after a merge, and a fully deleted bucket leaves the
+manifest. Also schema evolution when a batch touches only some
+buckets."""
 
 from __future__ import annotations
 
 import glob
+import hashlib
 import os
 
 import pytest
 
-from pyspark.sql import functions as F
-
-from postgres_opensearch_cdc_spark.streaming.apply import PartitionedMirrorSink
+from postgres_opensearch_cdc_spark.streaming.apply import VersionedMirrorSink
 
 
 def chg(spark, rows):
@@ -19,19 +21,20 @@ def chg(spark, rows):
 
 
 def file_state(path):
-    return {
-        f: os.path.getmtime(f)
-        for f in glob.glob(os.path.join(path, "_bucket=*", "*.parquet"))
-    }
+    out = {}
+    for f in glob.glob(os.path.join(path, "data", "commit-*", "_bucket=*", "*.parquet")):
+        with open(f, "rb") as fh:
+            out[f] = hashlib.md5(fh.read()).hexdigest()
+    return out
 
 
 @pytest.fixture()
 def sink(tmp_path):
-    return PartitionedMirrorSink(
+    return VersionedMirrorSink(
         path=str(tmp_path / "mirror"),
         key_cols=["id"],
         seq_cols=["offset"],
-        num_buckets=8,
+        bucket_expr="id div 10",
     )
 
 
@@ -48,6 +51,8 @@ def test_merge_correctness(spark, sink):
     assert state[5] == "v5b"
     assert 7 not in state
     assert state[100] == "new"
+    # the insert past the last range opened a new bucket
+    assert sorted(map(int, sink.latest_manifest()["buckets"])) == list(range(11))
 
 
 def test_untouched_buckets_not_rewritten(spark, sink):
@@ -56,66 +61,50 @@ def test_untouched_buckets_not_rewritten(spark, sink):
     )
     before = file_state(sink.path)
     assert len(before) > 0
-    # a single-key batch touches exactly one bucket
+    buckets_before = dict(sink.latest_manifest()["buckets"])
+    # a single-key batch touches exactly one range bucket: id 5 -> 0
     sink.apply_batch(chg(spark, [("u", 5, "v5b", 300)]), batch_id=1)
     after = file_state(sink.path)
-    touched_bucket = (
-        spark.createDataFrame([(5,)], "id long")
-        .select(F.pmod(F.xxhash64("id"), F.lit(8)).alias("b"))
-        .head()["b"]
-    )
     changed = {
         f for f in before if f not in after or after[f] != before[f]
     } | {f for f in after if f not in before}
     assert changed, "the touched bucket must rewrite"
     for f in changed:
-        assert f"_bucket={touched_bucket}" in f, f"untouched partition rewritten: {f}"
+        assert f"{os.sep}_bucket=0{os.sep}" in f, f"untouched partition rewritten: {f}"
+    buckets_after = sink.latest_manifest()["buckets"]
+    moved = {b for b in buckets_after if buckets_after[b] != buckets_before[b]}
+    assert moved == {"0"}
     # correctness preserved
     assert sink.read(spark).count() == 200
 
 
 def test_fully_deleted_bucket_removed(spark, sink):
-    # two keys that map to different buckets
-    ids = list(range(20))
+    ids = list(range(30))
     sink.apply_batch(chg(spark, [("c", i, "x", i) for i in ids]), batch_id=0)
-    victim = 3
-    vb = (
-        spark.createDataFrame([(victim,)], "id long")
-        .select(F.pmod(F.xxhash64("id"), F.lit(8)).alias("b"))
-        .head()["b"]
-    )
-    # delete every key in the victim's bucket
-    bucket_of = {
-        r["id"]: r["b"]
-        for r in spark.createDataFrame([(i,) for i in ids], "id long")
-        .select("id", F.pmod(F.xxhash64("id"), F.lit(8)).alias("b"))
-        .collect()
-    }
-    doomed = [i for i, b in bucket_of.items() if b == vb]
+    # delete every key in range bucket 1 (ids 10..19)
+    doomed = list(range(10, 20))
     sink.apply_batch(
         chg(spark, [("d", i, None, 100 + i) for i in doomed]), batch_id=1
     )
     state = {r["id"] for r in sink.read(spark).collect()}
     assert state == set(ids) - set(doomed)
-    assert not os.path.exists(os.path.join(sink.path, f"_bucket={vb}"))
+    assert sorted(map(int, sink.latest_manifest()["buckets"])) == [0, 2]
 
 
 def test_equal_seq_replay_batch_row_wins(spark, sink):
-    """Equal-seq tie-break parity with the other sinks: the incoming
-    batch row beats the mirrored row when seq values tie (replayed
-    backfill shape, both sides seq=-1)."""
-    sink.apply_batch(chg(spark, [("c", 1, "a", -1), ("c", 2, "b", -1)]), batch_id=0)
-    sink.apply_batch(chg(spark, [("d", 1, None, -1), ("u", 2, "b2", -1)]), batch_id=1)
+    """Equal-seq tie-break across range buckets: the incoming batch row
+    beats the mirrored row when seq values tie (replayed backfill
+    shape, both sides seq=-1)."""
+    sink.apply_batch(chg(spark, [("c", 1, "a", -1), ("c", 12, "b", -1)]), batch_id=0)
+    sink.apply_batch(chg(spark, [("d", 1, None, -1), ("u", 12, "b2", -1)]), batch_id=1)
     state = {r["id"]: r["v"] for r in sink.read(spark).collect()}
-    assert state == {2: "b2"}
+    assert state == {12: "b2"}
 
 
 def test_versioned_mirror_schema_evolution(spark, tmp_path):
     """Schema evolution across commits: a column added mid-stream
     null-fills untouched buckets' older commit files on read, and the
     evolved column survives later batches without it."""
-    from postgres_opensearch_cdc_spark.streaming.apply import VersionedMirrorSink
-
     sink = VersionedMirrorSink(
         path=str(tmp_path / "vmirror"),
         key_cols=["id"],
@@ -145,122 +134,32 @@ def test_versioned_mirror_schema_evolution(spark, tmp_path):
     assert rows[2]["tier"] == "gold", "evolved column lost across commits"
 
 
-def test_partitioned_mirror_schema_evolution_across_buckets(spark, tmp_path):
+def test_partitioned_mirror_schema_evolution_across_buckets(spark, sink):
     """A batch that evolves the schema touches only SOME buckets —
-    untouched buckets keep old-schema files. Reads must mergeSchema so
-    the evolved column survives, and later merges must not destroy it."""
-    from postgres_opensearch_cdc_spark.streaming.apply import PartitionedMirrorSink
-
-    sink = PartitionedMirrorSink(
-        path=str(tmp_path / "pmirror"),
-        key_cols=["id"],
-        seq_cols=["offset"],
-        num_buckets=8,
-    )
+    untouched buckets keep old-schema files. Reads must null-fill them
+    so the evolved column survives, and later merges must not destroy
+    it."""
     b1 = spark.createDataFrame(
-        [("c", i, f"s{i}", i) for i in range(1, 9)],
-        "op string, id long, status string, offset long",
+        [("c", i, f"s{i}", i) for i in range(1, 80, 10)],
+        "op string, id long, v string, offset long",
     )
     sink.apply_batch(b1, 0)
     b2 = spark.createDataFrame(
         [("u", 1, "s1b", 100, "gold")],
-        "op string, id long, status string, offset long, tier string",
+        "op string, id long, v string, offset long, tier string",
     )
     sink.apply_batch(b2, 1)
+    assert len(set(sink.latest_manifest()["buckets"].values())) == 2
     rows = {r["id"]: r for r in sink.read(spark).collect()}
     assert rows[1]["tier"] == "gold"
-    assert all(rows[i]["tier"] is None for i in range(2, 9))
-    # a later batch touching id=1's bucket must preserve tier for id=1
+    assert all(rows[i]["tier"] is None for i in range(11, 80, 10))
+    # a later batch without the column, touching id=1's bucket, must
+    # keep the column in the mirror
     b3 = spark.createDataFrame(
         [("u", 1, "s1c", 200)],
-        "op string, id long, status string, offset long",
+        "op string, id long, v string, offset long",
     )
     sink.apply_batch(b3, 2)
     rows = {r["id"]: r for r in sink.read(spark).collect()}
-    assert rows[1]["status"] == "s1c"
+    assert rows[1]["v"] == "s1c"
     assert "tier" in sink.read(spark).columns, "evolved column dropped on read"
-
-
-def test_pre_sidecar_mirror_falls_back_and_gains_sidecar(spark, sink):
-    """Mirrors written before the schema sidecar existed (or whose
-    sidecar was lost) must read via the mergeSchema fallback and gain
-    the sidecar on their next write; the sidecar must survive dynamic
-    partition overwrites and reflect evolved columns."""
-    sink.apply_batch(chg(spark, [("c", i, f"v{i}", i) for i in range(1, 9)]), 0)
-    sidecar = sink._schema_path()
-    assert os.path.exists(sidecar), "write must produce the sidecar"
-    os.remove(sidecar)  # simulate a pre-sidecar mirror
-    assert {r["id"] for r in sink.read(spark).collect()} == set(range(1, 9))
-    sink.apply_batch(chg(spark, [("u", 1, "v1b", 100)]), 1)
-    assert os.path.exists(sidecar), "next write must restore the sidecar"
-    rows = {r["id"]: r["v"] for r in sink.read(spark).collect()}
-    assert rows[1] == "v1b" and len(rows) == 8
-    # evolved column lands in the sidecar, so sidecar-schema reads see
-    # it even for untouched old-schema buckets (null-filled)
-    b_ev = spark.createDataFrame(
-        [("u", 2, "v2b", 200, "gold")],
-        "op string, id long, v string, offset long, tier string",
-    )
-    sink.apply_batch(b_ev, 2)
-    import json
-
-    with open(sidecar) as fh:
-        names = [f["name"] for f in json.load(fh)["fields"]]
-    assert "tier" in names and "_bucket" not in names
-    out = {r["id"]: r for r in sink.read(spark).collect()}
-    assert out[2]["tier"] == "gold" and out[5]["tier"] is None
-
-
-def test_sidecar_persisted_before_data_write(spark, sink, monkeypatch):
-    """Crash-ordering contract: the schema sidecar must be stored
-    BEFORE the data write. A crash between the two then leaves a
-    sidecar listing a column the files lack (benign — null-filled);
-    the old write-then-store order could leave a STALE sidecar that
-    silently drops an evolved column on every later read and merge."""
-    sink.apply_batch(chg(spark, [("c", i, f"v{i}", i) for i in range(1, 9)]), 0)
-    before = file_state(sink.path)
-    seen = {}
-    orig = PartitionedMirrorSink._store_schema
-
-    def spy(self, schema):
-        seen["files_at_store"] = file_state(self.path)
-        seen["names"] = [f.name for f in schema.fields]
-        return orig(self, schema)
-
-    monkeypatch.setattr(PartitionedMirrorSink, "_store_schema", spy)
-    b_ev = spark.createDataFrame(
-        [("u", 1, "v1b", 100, "gold")],
-        "op string, id long, v string, offset long, tier string",
-    )
-    sink.apply_batch(b_ev, 1)
-    assert "tier" in seen["names"], "sidecar must carry the evolved column"
-    assert seen["files_at_store"] == before, (
-        "sidecar must be stored before any data file is rewritten"
-    )
-
-
-def test_crash_between_sidecar_and_write_is_benign(spark, sink):
-    """Simulate the (now only possible) crash window: sidecar already
-    lists an evolved column, data write never happened. Reads must
-    null-fill the phantom column and a batch replay must converge."""
-    import json
-
-    sink.apply_batch(chg(spark, [("c", i, f"v{i}", i) for i in range(1, 9)]), 0)
-    with open(sink._schema_path()) as fh:
-        sc = json.load(fh)
-    sc["fields"].append(
-        {"name": "tier", "type": "string", "nullable": True, "metadata": {}}
-    )
-    with open(sink._schema_path(), "w") as fh:
-        json.dump(sc, fh)
-    rows = sink.read(spark).collect()
-    assert len(rows) == 8 and all(r["tier"] is None for r in rows)
-    # checkpoint recovery replays the evolving batch: converges
-    b_ev = spark.createDataFrame(
-        [("u", 2, "v2b", 100, "gold")],
-        "op string, id long, v string, offset long, tier string",
-    )
-    sink.apply_batch(b_ev, 1)
-    out = {r["id"]: r for r in sink.read(spark).collect()}
-    assert out[2]["tier"] == "gold" and out[5]["tier"] is None
-    assert out[2]["v"] == "v2b" and len(out) == 8

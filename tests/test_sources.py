@@ -153,9 +153,9 @@ def test_parse_captured_debezium_messages(spark):
 
 def test_parsed_kafka_batch_merges_like_file_path(spark, tmp_path):
     """The parsed Kafka frame drives the SAME merge the file path does:
-    apply the captured batch through a MirrorSink and check final state
+    apply the captured batch through the mirror sink and check final state
     (id 1 blocked, id 2 deleted)."""
-    from postgres_opensearch_cdc_spark.streaming.apply import MirrorSink
+    from postgres_opensearch_cdc_spark.streaming.apply import VersionedMirrorSink
 
     msgs = [
         _debezium("r", None, {"id": 1, "card_number": "4111", "status": "ACTIVE"}, 100),
@@ -177,7 +177,7 @@ def test_parsed_kafka_batch_merges_like_file_path(spark, tmp_path):
         ],
         "offset",
     )
-    sink = MirrorSink(
+    sink = VersionedMirrorSink(
         path=str(tmp_path / "mirror"), key_cols=["id"], seq_cols=["offset"]
     )
     sink.apply_batch(flat, batch_id=0)

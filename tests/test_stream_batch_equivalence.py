@@ -5,6 +5,7 @@ makes the two paths interchangeable (SURVEY §7.2 phase 4)."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 
@@ -13,7 +14,7 @@ from pyspark.sql import functions as F
 from postgres_opensearch_cdc_spark.cdc.apply import compact_changelog
 from postgres_opensearch_cdc_spark.cdc.envelope import events_as_changelog
 from postgres_opensearch_cdc_spark.registry import load_table
-from postgres_opensearch_cdc_spark.streaming.apply import MirrorSink
+from postgres_opensearch_cdc_spark.streaming.apply import VersionedMirrorSink
 
 
 def test_streaming_apply_equals_batch_compaction(spark, sf_dir, tmp_path):
@@ -52,7 +53,7 @@ def test_streaming_apply_equals_batch_compaction(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .json(src)
     )
-    sink = MirrorSink(
+    sink = VersionedMirrorSink(
         path=str(tmp_path / "mirror"), key_cols=["key"], seq_cols=["ts", "event_id"]
     )
     q = (
@@ -62,7 +63,8 @@ def test_streaming_apply_equals_batch_compaction(spark, sf_dir, tmp_path):
         .start()
     )
     q.awaitTermination(180)
-    assert sink.batches_applied >= 3  # micro-batch shaping engaged
+    # micro-batch shaping engaged: one committed manifest per batch
+    assert len(glob.glob(os.path.join(sink.path, "_commits", "v*.json"))) >= 3
 
     got = {(r["key"], r["event_id"]) for r in sink.read(spark).collect()}
     assert got == expected

@@ -11,9 +11,10 @@ import pytest
 
 from pyspark.sql import functions as F, types as T
 
+from postgres_opensearch_cdc_spark.engine import CdcEngine
 from postgres_opensearch_cdc_spark.sources.changelog import file_changelog_stream
 from postgres_opensearch_cdc_spark.streaming.apply import (
-    MirrorSink,
+    VersionedMirrorSink,
     start_mirror_stream,
     streaming_dedup,
     windowed_event_counts,
@@ -79,7 +80,7 @@ def test_stream_applies_changelog(spark, workdir):
             envelope("d", 2, None, 4),
         ],
     )
-    sink = MirrorSink(
+    sink = VersionedMirrorSink(
         path=os.path.join(workdir, "mirror"), key_cols=["id"], seq_cols=["offset"]
     )
     run_stream(spark, src, sink, os.path.join(workdir, "ckpt"))
@@ -92,7 +93,7 @@ def test_incremental_micro_batches(spark, workdir):
     the snapshot-then-stream lifecycle (ST1/ST3)."""
     src = os.path.join(workdir, "log")
     ckpt = os.path.join(workdir, "ckpt")
-    sink = MirrorSink(
+    sink = VersionedMirrorSink(
         path=os.path.join(workdir, "mirror"), key_cols=["id"], seq_cols=["offset"]
     )
     write_changelog_file(src, "b1.json", [envelope("r", 1, "A", 1), envelope("r", 2, "B", 2)])
@@ -109,7 +110,7 @@ def test_batch_replay_is_idempotent(spark, workdir):
     mirror unchanged."""
     src = os.path.join(workdir, "log")
     write_changelog_file(src, "b1.json", [envelope("c", 1, "A", 1), envelope("u", 1, "B", 2)])
-    sink = MirrorSink(
+    sink = VersionedMirrorSink(
         path=os.path.join(workdir, "mirror"), key_cols=["id"], seq_cols=["offset"]
     )
     run_stream(spark, src, sink, os.path.join(workdir, "ckpt"))
@@ -180,25 +181,23 @@ def test_streaming_dedup_drops_duplicate_keys(spark, workdir):
 
 
 def test_mirror_equal_seq_replay_batch_row_wins(spark, workdir):
-    """Equal-seq tie-break (MirrorSink): at equal seq the incoming batch
-    row deterministically beats the mirrored row, so a replayed backfill
-    carrying seq=-1 on both sides (one now a delete) resolves the same
-    way on every run."""
-    from postgres_opensearch_cdc_spark.streaming.apply import MirrorSink
-
-    sink = MirrorSink(
+    """Equal-seq tie-break through the stream: at equal seq the incoming
+    batch row deterministically beats the mirrored row, so a replayed
+    backfill carrying seq=-1 on both sides (one now a delete) resolves
+    the same way on every run."""
+    src = os.path.join(workdir, "log")
+    ckpt = os.path.join(workdir, "ckpt")
+    sink = VersionedMirrorSink(
         path=os.path.join(workdir, "mirror-tie"), key_cols=["id"], seq_cols=["offset"]
     )
-    first = spark.createDataFrame(
-        [("c", 1, "a", -1), ("c", 2, "b", -1)],
-        "op string, id long, status string, offset long",
+    write_changelog_file(
+        src, "b1.json", [envelope("r", 1, "a", -1), envelope("r", 2, "b", -1)]
     )
-    sink.apply_batch(first, batch_id=0)
-    replay = spark.createDataFrame(
-        [("d", 1, None, -1), ("u", 2, "b2", -1)],
-        "op string, id long, status string, offset long",
+    run_stream(spark, src, sink, ckpt)
+    write_changelog_file(
+        src, "b2.json", [envelope("d", 1, None, -1), envelope("u", 2, "b2", -1)]
     )
-    sink.apply_batch(replay, batch_id=1)
+    run_stream(spark, src, sink, ckpt)
     state = {r["id"]: r["status"] for r in sink.read(spark).collect()}
     assert state == {2: "b2"}
 
@@ -208,7 +207,7 @@ def test_mirror_schema_evolution_add_column(spark, workdir):
     appears on new rows, null-fills history, and survives later
     batches that don't carry it — the sink analogue of the reference's
     dynamic mapping (W5)."""
-    sink = MirrorSink(
+    sink = VersionedMirrorSink(
         path=os.path.join(workdir, "mirror"),
         key_cols=["id"],
         seq_cols=["offset"],
@@ -239,30 +238,37 @@ def test_mirror_schema_evolution_add_column(spark, workdir):
 def test_mirror_type_widening(spark, workdir):
     """Upstream type widening (INT -> BIGINT) flows through the merge:
     the union coerces to the wider type and values past int range
-    survive."""
-    sink = MirrorSink(
+    survive. The untouched bucket keeps its int32 file, which is read
+    back as long under the widened manifest schema."""
+    sink = VersionedMirrorSink(
         path=os.path.join(workdir, "mirror_w"),
         key_cols=["id"],
         seq_cols=["offset"],
+        num_buckets=2,
     )
     b1 = spark.createDataFrame(
-        [("c", 1, 5, 1)], "op string, id long, qty int, offset long"
+        [("c", i, i * 5, i) for i in range(1, 9)],
+        "op string, id long, qty int, offset long",
     )
     sink.apply_batch(b1, 0)
+    assert len(sink.latest_manifest()["buckets"]) == 2
     b2 = spark.createDataFrame(
-        [("u", 1, 6_000_000_000, 2)], "op string, id long, qty long, offset long"
+        [("u", 1, 6_000_000_000, 9)], "op string, id long, qty long, offset long"
     )
     sink.apply_batch(b2, 1)
+    commits = set(sink.latest_manifest()["buckets"].values())
+    assert len(commits) == 2, "one bucket must stay on the int32 commit"
     out = sink.read(spark)
     assert out.schema["qty"].dataType.typeName() == "long"
-    assert out.collect()[0]["qty"] == 6_000_000_000
+    qty = {r["id"]: r["qty"] for r in out.collect()}
+    assert qty == {1: 6_000_000_000, **{i: i * 5 for i in range(2, 9)}}
 
 
 def test_mirror_rejects_missing_key_column(spark, workdir):
     """Schema evolution null-fills PAYLOAD columns only: a batch
     missing a key/seq/op column is a producer bug and must fail
     loudly, not collapse the merge window onto NULL keys."""
-    sink = MirrorSink(
+    sink = VersionedMirrorSink(
         path=os.path.join(workdir, "mirror_g"),
         key_cols=["id"],
         seq_cols=["offset"],
@@ -279,25 +285,30 @@ def test_mirror_rejects_missing_key_column(spark, workdir):
 
 
 def test_multitable_schema_evolution_is_per_table(spark, workdir):
-    """Routed tables evolve independently: a new column arriving for
-    one table must not leak into the other's mirror."""
-    from postgres_opensearch_cdc_spark.streaming.apply import MultiTableMirrorSink
+    """Routed tables keep their own columns: table a's ``tier`` is in
+    the union parse, and b's events carry a stray ``tier`` field too,
+    but only a's mirror gains the column."""
+    engine = CdcEngine(spark=spark, workdir=os.path.join(workdir, "engine"))
+    engine.register_table("a", T.StructType([
+        *ROW_SCHEMA.fields, T.StructField("tier", T.StringType()),
+    ]))
+    engine.register_table("b", ROW_SCHEMA)
 
-    a = MirrorSink(path=os.path.join(workdir, "ma"), key_cols=["id"],
-                   seq_cols=["offset"])
-    b = MirrorSink(path=os.path.join(workdir, "mb"), key_cols=["id"],
-                   seq_cols=["offset"])
-    multi = MultiTableMirrorSink(sinks={"a": a, "b": b})
-    b1 = spark.createDataFrame(
-        [("c", 1, "x", 1, "a"), ("c", 1, "y", 1, "b")],
-        "op string, id long, status string, offset long, target_table string",
-    )
-    multi.apply_batch(b1, 0)
-    b2 = spark.createDataFrame(
-        [("u", 1, "x2", 2, "gold", "a")],
-        "op string, id long, status string, offset long, tier string, "
-        "target_table string",
-    )
-    multi.apply_batch(b2, 1)
-    assert a.read(spark).collect()[0]["tier"] == "gold"
-    assert "tier" not in b.read(spark).columns, "evolution leaked across tables"
+    def env(op, table, body, offset):
+        return json.dumps({
+            "op": op, "before": None, "after": body, "ts_ms": 1000 + offset,
+            "source": {"schema": "public", "table": table, "lsn": offset},
+            "offset": offset,
+        })
+
+    write_changelog_file(os.path.join(workdir, "log"), "b1.json", [
+        env("c", "a", {"id": 1, "status": "x"}, 1),
+        env("c", "b", {"id": 1, "status": "y", "tier": "stray"}, 2),
+        env("u", "a", {"id": 1, "status": "x2", "tier": "gold"}, 3),
+    ])
+    engine.start_routed_stream(os.path.join(workdir, "log"))
+    engine.await_all()
+    assert engine.view("a").collect()[0]["tier"] == "gold"
+    b = engine.view("b")
+    assert "tier" not in b.columns, "evolution leaked across tables"
+    assert [(r["id"], r["status"]) for r in b.collect()] == [(1, "y")]
