@@ -355,15 +355,15 @@ def cdc_throughput(spark, sf_dir: str) -> dict:
     - batch backfill rows/s (target >= 5000/s, TDD :1435)
     - per-micro-batch apply latency (target <= 1.5 s, TDD :1445)
     Every merge runs through ``VersionedMirrorSink``, the mirror the
-    engine ships: the upsert and micro-batch gates at the engine's
-    default bucket count, the ``partitioned_merge_*`` figures at 32
-    buckets (hash, then a clustered key range).
+    engine ships: the upsert and micro-batch gates at the bucket count
+    the sink derives from the mirror's bytes (the engine default), the
+    ``partitioned_merge_*`` figures at a pinned 32 buckets (hash, then a
+    clustered key range).
     """
     import shutil
     import tempfile
 
     from postgres_opensearch_cdc_spark.cdc.envelope import events_as_changelog
-    from postgres_opensearch_cdc_spark.engine import CdcEngine
     from postgres_opensearch_cdc_spark.registry import load_table
     from postgres_opensearch_cdc_spark.streaming.apply import VersionedMirrorSink
 
@@ -406,10 +406,8 @@ def cdc_throughput(spark, sf_dir: str) -> dict:
         # exercising the initial-snapshot merge shape)
         log = events_as_changelog(load_table(spark, sf_dir, "events"))
         n_events = log.count()
-        mirror("mirror_warm", num_buckets=CdcEngine.num_buckets).apply_batch(
-            log, batch_id=0
-        )
-        sink = mirror("mirror", num_buckets=CdcEngine.num_buckets)
+        mirror("mirror_warm").apply_batch(log, batch_id=0)
+        sink = mirror("mirror")
         # batch ids never repeat on one sink: its replay guard skips a
         # (writer, batch) pair it has already committed
         dts = []
@@ -500,8 +498,7 @@ def knn_serving(spark, sf_dir: str) -> float:
             "vec_id", "label", "embedding"
         )
         q = [float(x) for x in vecs.filter("vec_id = 0").head()["embedding"]]
-        engine = CdcEngine(spark=spark, workdir=tmp, key_col="vec_id",
-                           seq_col="offset", num_buckets=8)
+        engine = CdcEngine(spark=spark, workdir=tmp, key_col="vec_id", seq_col="offset")
         engine.register_table("vecs", vecs.schema)
         engine.backfill("vecs", vecs)
         engine.put_knn_index("vecs", "embedding", cells=16, nprobe=4)

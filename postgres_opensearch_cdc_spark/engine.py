@@ -60,7 +60,6 @@ class CdcEngine:
     workdir: str
     key_col: str = "id"
     seq_col: str = "offset"
-    num_buckets: int = 64
     tables: dict[str, TableHandle] = field(default_factory=dict)
     aliases: dict[str, list[str]] = field(default_factory=dict)
     # (table, field) -> built-index metadata; see put_knn_index
@@ -146,7 +145,6 @@ class CdcEngine:
             path=mirror_path,
             key_cols=[self.key_col],
             seq_cols=[self.seq_col],
-            num_buckets=self.num_buckets,
             bucket_expr=bucket_expr,
         )
         handle = TableHandle(name=name, schema=schema, sink=sink)
@@ -1606,10 +1604,10 @@ class CdcEngine:
 
     def cat_indices(self) -> list[dict]:
         """The ``_cat/indices`` analog: one row per mirror with live
-        doc count, bytes on disk (live data files only — old
-        un-vacuumed commits excluded, matching the 'primary store
-        size' reading), committed version, and the
-        sequence high-water mark. Aliases are listed with their
+        doc count, bytes on disk (live data files only, as the
+        manifest records them — old un-vacuumed commits excluded,
+        matching the 'primary store size' reading), committed
+        version, and the sequence high-water mark. Aliases are listed with their
         member resolution, like ES's alias cat endpoint."""
         out = []
         for name, handle in sorted(self.tables.items()):
@@ -1621,14 +1619,7 @@ class CdcEngine:
             row: dict = {"index": name, "status": "open",
                          "docs_count": self.view(name).count()}
             manifest = handle.sink.latest_manifest()
-            live = 0
-            for b, cid in manifest["buckets"].items():
-                d = os.path.join(handle.sink._data_dir, cid, f"_bucket={b}")
-                for dp, _, fs in os.walk(d):
-                    live += sum(
-                        os.path.getsize(os.path.join(dp, f)) for f in fs
-                    )
-            row["store_bytes"] = live
+            row["store_bytes"] = sum(handle.sink.bucket_bytes(manifest).values())
             row["version"] = manifest["version"]
             row["max_seq"] = (manifest.get("max_seq") or {}).get(self.seq_col)
             out.append(row)

@@ -178,13 +178,9 @@ def engine_search_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
         "op", "key", "event_id", "event_type",
         F.round(F.col("value"), 2).alias("value"),
     )
-    # num_buckets sizes FILE granularity: a uniform-key batch touches
-    # every bucket regardless, so extra buckets only multiply commit
-    # files/dirs (64 → 16 measured 4.2 s → 1.95 s on this 100k-event
-    # mirror). Production sizes buckets to the 128 MB-1 GB file band.
     eng = CdcEngine(
         spark, tempfile.mkdtemp(prefix="engine_mirror_"),
-        key_col="key", seq_col="event_id", num_buckets=16,
+        key_col="key", seq_col="event_id",
     )
     handle = eng.register_table(
         "user_state",
@@ -236,9 +232,7 @@ def engine_snapshot_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value"), 2).alias("value"),
     )
     workdir = tempfile.mkdtemp(prefix="engine_dr_")
-    eng = CdcEngine(
-        spark, workdir, key_col="key", seq_col="event_id", num_buckets=16,
-    )
+    eng = CdcEngine(spark, workdir, key_col="key", seq_col="event_id")
     handle = eng.register_table(
         "user_state",
         T.StructType([
@@ -286,7 +280,7 @@ def engine_bulk_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     eng = CdcEngine(
         spark, tempfile.mkdtemp(prefix="engine_bulk_"),
-        key_col="n_nationkey", seq_col="offset", num_buckets=4,
+        key_col="n_nationkey", seq_col="offset",
     )
     eng.register_table("nation", nation.schema)
     eng.backfill("nation", nation)
@@ -338,7 +332,7 @@ def alias_union_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     eng = CdcEngine(
         spark, tempfile.mkdtemp(prefix="engine_alias_"),
-        key_col="o_orderkey", seq_col="offset", num_buckets=8,
+        key_col="o_orderkey", seq_col="offset",
     )
     s97 = base.filter(F.col("_yr") == 1997).drop("_yr", "o_orderstatus")
     s98 = base.filter(F.col("_yr") == 1998).drop("_yr")
@@ -377,7 +371,7 @@ def _events_engine(spark: SparkSession, sf_dir: str, prefix: str):
     )
     eng = CdcEngine(
         spark, tempfile.mkdtemp(prefix=prefix),
-        key_col="key", seq_col="event_id", num_buckets=16,
+        key_col="key", seq_col="event_id",
     )
     handle = eng.register_table(
         "user_state",
@@ -811,8 +805,7 @@ def _rollup_engine(spark: SparkSession, sf_dir: str, prefix: str):
         T.StructField("value", T.DoubleType()),
         T.StructField("props", T.StringType()),
     ])
-    eng = CdcEngine(spark=spark, workdir=workdir, key_col="key",
-                    seq_col="offset", num_buckets=4)
+    eng = CdcEngine(spark=spark, workdir=workdir, key_col="key", seq_col="offset")
     eng.register_table("events_tbl", schema)
     return eng, log_dir
 

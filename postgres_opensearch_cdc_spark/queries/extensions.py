@@ -508,7 +508,7 @@ def engine_knn_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     eng = CdcEngine(
         spark, tempfile.mkdtemp(prefix="engine_knn_"),
-        key_col="vec_id", seq_col="offset", num_buckets=8,
+        key_col="vec_id", seq_col="offset",
     )
     corpus = vecs.filter(F.col("vec_id") != 0).select(
         "vec_id", "label", "embedding"

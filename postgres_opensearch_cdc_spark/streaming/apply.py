@@ -20,6 +20,7 @@ capabilities the reference lacks; Spark-native extensions).
 
 from __future__ import annotations
 
+import math
 import os
 from dataclasses import dataclass
 from functools import reduce
@@ -117,11 +118,31 @@ class VersionedMirrorSink:
     Merge cost is |batch| + |touched bucket slices|, not |mirror|: only
     the touched buckets' directories are read, straight out of the
     manifest, which is file-level pruning without even a
-    partition-filter scan. The bucket is ``pmod(xxhash64(key),
-    num_buckets)`` by default; a range ``bucket_expr`` (e.g.
-    ``"id div 100000"``) keeps clustered update keys in few buckets
-    (SCALE.md §2). Old commits/manifests accumulate until vacuum() —
-    time-travel for free until then.
+    partition-filter scan. The bucket is ``pmod(xxhash64(key), n)`` by
+    default; a range ``bucket_expr`` (e.g. ``"id div 100000"``) keeps
+    clustered update keys in few buckets (SCALE.md §2). Old
+    commits/manifests accumulate until vacuum() — time-travel for free
+    until then.
+
+    The hash-bucket count ``n`` is a property of the data, recorded in
+    each manifest (``num_buckets``, plus the on-disk bytes of every
+    live bucket in ``bucket_bytes``). The target is one bucket per
+    ``spark.sql.files.openCostInBytes`` (4 MB by default), Spark's
+    estimate of what opening one file costs in bytes read: a merge pays
+    that per touched bucket plus the touched buckets' bytes, so buckets
+    of about that size keep both a one-key batch (one bucket rewritten)
+    and a batch touching every bucket (per-file cost about the bytes'
+    cost) within a small factor of their best layout. The first commit
+    writes 1 bucket. Each later commit computes the smallest power of
+    two >= live bytes / target and, when that exceeds the recorded
+    count, re-buckets the whole mirror under it in the same merge
+    (every mapped bucket counts as touched). Doubling keeps rewrites
+    amortized O(1) per byte as the mirror grows; the count never
+    shrinks. A manifest without ``num_buckets`` has no recorded
+    layout (older mirrors, or a ``bucket_expr`` one), so its first
+    commit here re-buckets every row the same way. An explicit
+    ``num_buckets=N`` pins the layout instead (and must match the
+    manifest's).
 
     Building a snapshot frame (read(), and the merge's touched-bucket
     slice) launches no Spark job: the manifest's schema is passed to
@@ -140,13 +161,55 @@ class VersionedMirrorSink:
     key_cols: list[str]
     seq_cols: list[str]
     op_col: str = "op"
-    num_buckets: int = 64
+    num_buckets: int | None = None  # None: derived from the data
     bucket_expr: str | None = None
 
-    def _bucket(self) -> "F.Column":
+    def _bucket(self, num_buckets: int | None) -> "F.Column":
         if self.bucket_expr is not None:
             return F.expr(self.bucket_expr)
-        return F.pmod(F.xxhash64(*[F.col(c) for c in self.key_cols]), F.lit(self.num_buckets))
+        return F.pmod(F.xxhash64(*[F.col(c) for c in self.key_cols]), F.lit(num_buckets))
+
+    def _layout(self, spark: SparkSession, manifest: dict | None,
+                sizes: dict) -> tuple[int | None, bool]:
+        """(hash-bucket count for this commit, whether it re-buckets
+        the mirror). ``sizes`` is the live bucket -> bytes map."""
+        if self.bucket_expr is not None:
+            return None, False
+        if manifest is None:
+            return self.num_buckets or 1, False
+        recorded = manifest.get("num_buckets")
+        if self.num_buckets is not None:
+            if recorded is not None and recorded != self.num_buckets:
+                raise ValueError(
+                    f"{self.path} is laid out in num_buckets={recorded}; "
+                    f"this sink pins {self.num_buckets} — merging under a "
+                    "different count would leave stale rows in old buckets"
+                )
+            want = self.num_buckets
+        else:
+            target = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+            want = 1 << max(0, math.ceil(sum(sizes.values()) / target) - 1).bit_length()
+        if recorded is None:
+            # no recorded layout: a key's old row may sit in any bucket
+            return want, True
+        return (want, True) if want > recorded else (recorded, False)
+
+    def _dir_bytes(self, commit_id: str, bucket) -> int:
+        d = os.path.join(self._data_dir, commit_id, f"_bucket={bucket}")
+        return sum(
+            e.stat().st_size for e in os.scandir(d)
+            if e.is_file() and not e.name.startswith(("_", "."))
+        )
+
+    def bucket_bytes(self, manifest: dict) -> dict:
+        """Live bucket -> bytes of its data files: the manifest's
+        record, or listed from the commit dirs for a manifest that
+        predates it."""
+        known = manifest.get("bucket_bytes") or {}
+        return {
+            b: known[b] if b in known else self._dir_bytes(cid, b)
+            for b, cid in manifest["buckets"].items()
+        }
 
     @property
     def _data_dir(self) -> str:
@@ -272,7 +335,9 @@ class VersionedMirrorSink:
         ):
             return  # replayed batch already committed — exactly-once
         version = (manifest["version"] + 1) if manifest else 1
-        batch = batch.withColumn("_bucket", self._bucket())
+        sizes = self.bucket_bytes(manifest) if manifest else {}
+        num_buckets, rebucket = self._layout(spark, manifest, sizes)
+        batch = batch.withColumn("_bucket", self._bucket(num_buckets))
         obs = None
         if manifest is None:
             # FIRST commit: no current slice to prune, and the manifest
@@ -308,6 +373,11 @@ class VersionedMirrorSink:
                 .collect()
             )
             touched = sorted(r["_bucket"] for r in stats)
+            if rebucket:
+                # the count grew, or the old one is unrecorded: every
+                # mapped bucket is rewritten under the new one (the
+                # slice below re-buckets its rows)
+                touched = sorted(int(b) for b in manifest["buckets"])
         prev_hwm = dict((manifest or {}).get("max_seq") or {})
         max_seq: dict = dict(prev_hwm)
         if manifest is not None:
@@ -336,7 +406,7 @@ class VersionedMirrorSink:
                             if c != self.op_col
                         ],
                     )
-                    .withColumn("_bucket", self._bucket())
+                    .withColumn("_bucket", self._bucket(num_buckets))
                     .withColumn("_pri", F.lit(0))
                 )
                 # schema-evolving merge: a column added upstream (ALTER
@@ -380,8 +450,10 @@ class VersionedMirrorSink:
         buckets = dict(manifest["buckets"]) if manifest else {}
         for b in touched:
             buckets.pop(str(b), None)
+            sizes.pop(str(b), None)
         for b in sorted(out_buckets):
             buckets[str(b)] = commit_id
+            sizes[str(b)] = self._dir_bytes(commit_id, b)
         os.makedirs(self._commits_dir, exist_ok=True)
         tmp = os.path.join(self._commits_dir, f".tmp-v{version:08d}.json")
         final = os.path.join(self._commits_dir, f"v{version:08d}.json")
@@ -392,6 +464,8 @@ class VersionedMirrorSink:
                     "batch_id": batch_id,
                     "writer_id": writer_id,
                     "buckets": buckets,
+                    "num_buckets": num_buckets,
+                    "bucket_bytes": sizes,
                     "max_seq": max_seq,
                     "schema": json.loads(merged.drop("_bucket").schema.json()),
                 },

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -21,3 +22,26 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture()
+def open_cost_bytes(spark):
+    """``with open_cost_bytes(n):`` runs its body with
+    ``spark.sql.files.openCostInBytes`` = n bytes, the versioned
+    mirror's bytes-per-bucket target, and restores the session value
+    after."""
+    key = "spark.sql.files.openCostInBytes"
+
+    @contextlib.contextmanager
+    def setting(n: int):
+        prev = spark.conf.get(key, None)
+        spark.conf.set(key, str(n))
+        try:
+            yield
+        finally:
+            if prev is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prev)
+
+    return setting

@@ -79,11 +79,16 @@ def test_full_lifecycle(spark, tmp_path):
     assert rows == {1: "BLOCKED", 3: "BLOCKED", 4: "ACTIVE"}
 
 
-def test_default_engine_merge_is_partition_pruned(spark, tmp_path):
+def test_default_engine_merge_is_partition_pruned(spark, tmp_path, open_cost_bytes):
     """The façade's DEFAULT sink must be the scale-safe one: a one-key
     batch against a populated mirror may only write the touched bucket —
     every pre-existing data file stays byte-identical (the O(|batch| +
-    touched-buckets), not O(|mirror|), merge-cost contract)."""
+    touched-buckets), not O(|mirror|), merge-cost contract).
+
+    The bucket count follows the mirror's bytes, so at the default
+    target (4 MB per bucket) 500 rows are one bucket; the mirror is
+    grown past one bucket under a 1 kB target, and the default is back
+    for the stream commit (the count never shrinks)."""
     import glob
     import hashlib
 
@@ -91,12 +96,19 @@ def test_default_engine_merge_is_partition_pruned(spark, tmp_path):
 
     engine = CdcEngine(spark=spark, workdir=str(tmp_path))
     engine.register_table("card", CARD_SCHEMA)
-    assert isinstance(engine.tables["card"].sink, VersionedMirrorSink)
+    sink = engine.tables["card"].sink
+    assert isinstance(sink, VersionedMirrorSink)
 
     snap = spark.createDataFrame(
         [(i, "ACTIVE", "DEBIT") for i in range(500)], CARD_SCHEMA
     )
     engine.backfill("card", snap)
+    assert len(sink.latest_manifest()["buckets"]) == 1
+    with open_cost_bytes(1024):
+        # a second backfill re-buckets the whole mirror under the small
+        # target (its rows are unchanged: a batch row wins equal seqs)
+        engine.backfill("card", snap)
+    assert len(sink.latest_manifest()["buckets"]) > 1
 
     def hashes():
         out = {}
@@ -516,8 +528,11 @@ def test_engine_knn_index_staleness_contract(spark, tmp_path):
     )
     q = [float(x) for x in vecs.filter("vec_id = 0").head()["embedding"]]
     engine = CdcEngine(spark=spark, workdir=str(tmp_path),
-                       key_col="vec_id", seq_col="offset", num_buckets=8)
+                       key_col="vec_id", seq_col="offset")
     engine.register_table("vecs", vecs.schema)
+    # pinned: a test-sized mirror derives 1 bucket; keep merges that
+    # touch only some buckets under the knn index
+    engine.tables["vecs"].sink.num_buckets = 8
     engine.backfill("vecs", vecs.filter("vec_id <> 0"))
     meta = engine.put_knn_index("vecs", "embedding", cells=4, nprobe=4)
     assert ("vecs", "embedding") in engine.knn_indexes
@@ -587,8 +602,11 @@ def test_bulk_stream_interleaving_fuzz(spark, tmp_path, seed):
     from pyspark.sql import functions as F
 
     rng = random.Random(1000 + seed)
-    engine = CdcEngine(spark=spark, workdir=str(tmp_path), num_buckets=4)
+    engine = CdcEngine(spark=spark, workdir=str(tmp_path))
     handle = engine.register_table("card", CARD_SCHEMA)
+    # pinned: a test-sized mirror derives 1 bucket, and the per-bucket
+    # seq high-water and slice pruning need merges touching only some
+    handle.sink.num_buckets = 4
 
     model: dict[int, tuple] = {}   # id -> (status, card_type) live rows
     model_seq: dict[int, int] = {}  # id -> seq of the live/last row
@@ -800,7 +818,7 @@ def test_snapshot_crash_window_and_knn_edges(spark, tmp_path):
     vecs = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
         "vec_id", "label", "embedding")
     veng = CdcEngine(spark=spark, workdir=str(tmp_path / "vwd"),
-                     key_col="vec_id", seq_col="offset", num_buckets=4)
+                     key_col="vec_id", seq_col="offset")
     veng.register_table("vecs", vecs.schema)
     veng.backfill("vecs", vecs.filter("vec_id <> 0"))
     veng.put_knn_index("vecs", "embedding", cells=4, nprobe=4)
@@ -847,7 +865,7 @@ def test_knn_index_route_preserves_dsl_contracts(spark, tmp_path):
     vecs = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
         "vec_id", "label", "embedding")
     engine = CdcEngine(spark=spark, workdir=str(tmp_path),
-                       key_col="vec_id", seq_col="offset", num_buckets=4)
+                       key_col="vec_id", seq_col="offset")
     engine.register_table("vecs", vecs.schema)
     engine.backfill("vecs", vecs.filter("vec_id <> 0"))
     engine.put_knn_index("vecs", "embedding", cells=4, nprobe=4)
@@ -872,8 +890,11 @@ def test_engine_knn_index_survives_restart(spark, tmp_path):
     )
     q = [float(x) for x in vecs.filter("vec_id = 0").head()["embedding"]]
     engine = CdcEngine(spark=spark, workdir=str(tmp_path),
-                       key_col="vec_id", seq_col="offset", num_buckets=8)
+                       key_col="vec_id", seq_col="offset")
     engine.register_table("vecs", vecs.schema)
+    # pinned: a test-sized mirror derives 1 bucket; keep merges that
+    # touch only some buckets under the knn index
+    engine.tables["vecs"].sink.num_buckets = 8
     engine.backfill("vecs", vecs.filter("vec_id <> 0"))
     meta = engine.put_knn_index("vecs", "embedding", cells=4, nprobe=4)
     body = {"knn": {"embedding": {"query_vector": q, "k": 5,
@@ -883,7 +904,7 @@ def test_engine_knn_index_survives_restart(spark, tmp_path):
 
     # restart: same workdir, fresh engine object
     engine2 = CdcEngine(spark=spark, workdir=str(tmp_path),
-                        key_col="vec_id", seq_col="offset", num_buckets=8)
+                        key_col="vec_id", seq_col="offset")
     engine2.register_table("vecs", vecs.schema)
     assert engine2.knn_indexes.get(("vecs", "embedding")) == meta
     got = [(r["vec_id"], r["cos_sim"])
@@ -910,7 +931,7 @@ def test_put_knn_index_hwm_before_build_scans(spark, tmp_path, monkeypatch):
     )
     q = [float(x) for x in vecs.filter("vec_id = 0").head()["embedding"]]
     engine = CdcEngine(spark=spark, workdir=str(tmp_path),
-                       key_col="vec_id", seq_col="offset", num_buckets=8)
+                       key_col="vec_id", seq_col="offset")
     engine.register_table("vecs", vecs.schema)
     engine.backfill("vecs", vecs.filter("vec_id <> 0"))
 
@@ -980,8 +1001,11 @@ def test_routed_stream_knn_freshness(spark, tmp_path):
         F.col("vec_id").alias("id"), "label", "embedding"
     )
     q = [float(x) for x in vecs.filter("id = 0").head()["embedding"]]
-    engine = CdcEngine(spark=spark, workdir=str(tmp_path), num_buckets=8)
+    engine = CdcEngine(spark=spark, workdir=str(tmp_path))
     engine.register_table("vecs", vecs.schema)
+    # pinned: a test-sized mirror derives 1 bucket; keep merges that
+    # touch only some buckets under the knn index
+    engine.tables["vecs"].sink.num_buckets = 8
     engine.backfill("vecs", vecs.filter("id <> 0"))
     meta = engine.put_knn_index("vecs", "embedding", cells=4, nprobe=4)
 

@@ -244,6 +244,9 @@ def test_snapshot_reads_launch_no_jobs(spark, tmp_path):
     engine = CdcEngine(spark=spark, workdir=str(tmp_path))
     schema = "id long, status string"
     engine.register_table("t", T.StructType.fromDDL(schema))
+    # pinned: 640 rows would derive 1 bucket, and the reads under test
+    # must span many bucket dirs over several commits
+    engine.tables["t"].sink.num_buckets = 64
     engine.bulk("t", [
         {"index": {"id": i, "status": "A"}} for i in range(640)
     ], batch_id=0)
@@ -353,3 +356,139 @@ def test_empty_mirror_after_full_delete_readable(spark, sink):
     assert df.columns == ["op", "id", "v", "offset", "extra"]
     assert df.count() == 0
     assert sink.read(spark, version=1).count() == 2
+
+
+# -- bucket count derived from the mirror's bytes ----------------------------
+
+
+def test_bucket_count_grows_with_mirror_bytes(spark, tmp_path, open_cost_bytes):
+    """A default sink sizes its hash buckets to
+    ``spark.sql.files.openCostInBytes``: the first commit is one
+    bucket, and as the mirror grows each commit that needs more
+    buckets re-buckets the whole mirror to the next power of two —
+    also when the commit's own batch touches a single key. The view
+    matches a last-write-wins oracle after every batch, older versions
+    still read as they were, and a replayed re-bucketing batch commits
+    nothing."""
+    import random
+
+    import pandas as pd
+
+    sink = VersionedMirrorSink(
+        path=str(tmp_path / "grow"), key_cols=["id"], seq_cols=["offset"]
+    )
+    rng = random.Random(11)
+    log: list[tuple] = []
+    oracle_at: dict[int, list] = {}
+    counts = []
+
+    def oracle():
+        df = pd.DataFrame(log, columns=["op", "id", "v", "offset"])
+        last = df.sort_values("offset").groupby("id").tail(1)
+        live = last[last["op"] != "d"]
+        return sorted(zip(live["id"].tolist(), live["v"].tolist()))
+
+    def view(version=None):
+        return sorted(
+            tuple(r) for r in sink.read(spark, version).select("id", "v").collect()
+        )
+
+    def batch(b):
+        """Even b: 150 inserts, 20 updates, 10 deletes; odd b: one update."""
+        live = [k for k, _ in oracle()]
+        big = b % 2 == 0
+        rows = [("c", 1000 * b + i, "%032x" % rng.getrandbits(128))
+                for i in range(150 if big else 0)]
+        rows += [("u", k, "%032x" % rng.getrandbits(128))
+                 for k in rng.sample(live, min(20 if big else 1, len(live)))]
+        rows += [("d", k, None) for k in rng.sample(live, min(10 if big else 0, len(live)))]
+        return [(op, k, v, len(log) + i) for i, (op, k, v) in enumerate(rows)]
+
+    rows = batch(0)
+    log += rows
+    sink.apply_batch(chg(spark, rows), batch_id=0, writer_id="w")
+    first = sink.latest_manifest()
+    assert first["num_buckets"] == 1
+    # target = the first commit's bytes, so each big batch adds about
+    # one target's worth and the count must grow at least twice
+    target = sum(first["bucket_bytes"].values())
+    oracle_at[first["version"]] = oracle()
+    counts.append(1)
+    with open_cost_bytes(target):
+        for b in range(1, 12):
+            rows = batch(b)
+            log += rows
+            sink.apply_batch(chg(spark, rows), batch_id=b, writer_id="w")
+            m = sink.latest_manifest()
+            n = m["num_buckets"]
+            assert n & (n - 1) == 0 and n >= counts[-1]
+            assert {int(k) for k in m["buckets"]} <= set(range(n))
+            assert sorted(m["bucket_bytes"]) == sorted(m["buckets"])
+            if n > counts[-1]:
+                # re-bucketed: every live bucket is in the new commit
+                assert len(set(m["buckets"].values())) == 1
+                sink.apply_batch(chg(spark, rows), batch_id=b, writer_id="w")
+                assert sink.latest_manifest()["version"] == m["version"]
+            counts.append(n)
+            oracle_at[m["version"]] = oracle()
+            assert view() == oracle_at[m["version"]]
+    assert len(set(counts)) >= 3, counts
+    for version, expected in oracle_at.items():
+        assert view(version) == expected, version
+
+
+@pytest.mark.parametrize("pinned", [None, 4])
+def test_manifest_without_bucket_count_rebuckets(spark, tmp_path, pinned):
+    """A manifest that records no bucket count (an older mirror, here 8
+    hash buckets) has no layout this sink can trust: a key's update
+    hashed under another count would miss its old row. The first
+    commit re-hashes every live row under the sink's count (derived:
+    1 for this size; or the pinned one), so no key is duplicated or
+    stale afterwards, older versions still read as written, and the
+    count is recorded from then on — a sink pinned to another count
+    then refuses the mirror."""
+    import json
+
+    path = str(tmp_path / "legacy")
+    VersionedMirrorSink(
+        path=path, key_cols=["id"], seq_cols=["offset"], num_buckets=8
+    ).apply_batch(chg(spark, [("c", i, f"v{i}", i) for i in range(300)]), 0)
+    mpath = os.path.join(path, "_commits", "v00000001.json")
+    with open(mpath) as fh:
+        legacy = json.load(fh)
+    del legacy["num_buckets"], legacy["bucket_bytes"]
+    with open(mpath, "w") as fh:
+        json.dump(legacy, fh)
+    assert len(legacy["buckets"]) == 8
+
+    sink = VersionedMirrorSink(
+        path=path, key_cols=["id"], seq_cols=["offset"], num_buckets=pinned
+    )
+    expected = {i: f"v{i}" for i in range(300)}
+    for b, batch in enumerate([
+        [("u", 5, "v5b", 1000)],
+        [("u", k, f"w{k}", 1001 + k) for k in (6, 7, 8, 9)] + [("d", 10, None, 1100)],
+    ], start=1):
+        sink.apply_batch(chg(spark, batch), batch_id=b)
+        for op, k, v, _ in batch:
+            if op == "d":
+                expected.pop(k)
+            else:
+                expected[k] = v
+        m = sink.latest_manifest()
+        assert m["num_buckets"] == (pinned or 1)
+        assert {int(k) for k in m["buckets"]} <= set(range(m["num_buckets"]))
+        rows = sink.read(spark).select("id", "v").collect()
+        assert len(rows) == len({r["id"] for r in rows}), "duplicate key rows"
+        assert dict(rows) == expected
+        if b == 1:
+            # the re-bucketing commit holds every live bucket
+            assert len(set(m["buckets"].values())) == 1
+    assert dict(sink.read(spark, version=1).select("id", "v").collect()) == {
+        i: f"v{i}" for i in range(300)
+    }
+
+    with pytest.raises(ValueError, match=f"num_buckets={pinned or 1}"):
+        VersionedMirrorSink(
+            path=path, key_cols=["id"], seq_cols=["offset"], num_buckets=16
+        ).apply_batch(chg(spark, [("u", 6, "x", 2000)]), batch_id=3)
