@@ -42,6 +42,7 @@ from postgres_opensearch_cdc_spark.sources.changelog import file_changelog_strea
 from postgres_opensearch_cdc_spark.streaming.apply import (
     RollupSink,
     VersionedMirrorSink,
+    observed_metrics,
     start_mirror_stream,
 )
 
@@ -72,6 +73,9 @@ class CdcEngine:
     monitors: dict = field(default_factory=dict)
     # template name -> {source, params}; see put_template
     templates: dict = field(default_factory=dict)
+    # monitor name -> whether its last evaluation in this engine fired;
+    # picks the evaluation's write path (see _evaluate_monitor)
+    _monitor_fired: dict = field(default_factory=dict, init=False, repr=False)
 
     # -- lifecycle ---------------------------------------------------------
 
@@ -1357,7 +1361,10 @@ class CdcEngine:
         exactly-once, matching the span store."""
         import hashlib
         import json
+        import shutil
         import uuid
+
+        from pyspark.sql import Observation
 
         spec = self.monitors[mname]
         base = os.path.join(self.workdir, f"alerts_{mname}")
@@ -1381,13 +1388,30 @@ class CdcEngine:
         result = self.search(spec["table"], spec["body"])
         hits = result.filter(F.expr(spec["condition"]))
         out = self._alert_row(mname, hits, batch_id)
-        n = out.count()
-        commit = None
-        if n:
-            commit = f"commit-{uuid.uuid4().hex[:12]}"
-            out.write.mode("overwrite").parquet(
-                os.path.join(base, "data", commit)
-            )
+        commit = f"commit-{uuid.uuid4().hex[:12]}"
+        data_dir = os.path.join(base, "data", commit)
+        if self._monitor_fired.get(mname):
+            # the last evaluation fired, so this one likely fires too:
+            # one pass, the write counting its own rows. A miss costs
+            # the write of an empty dir, which no manifest references,
+            # and its removal.
+            obs = Observation()
+            out.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+                "overwrite"
+            ).parquet(data_dir)
+            n = observed_metrics(obs).get("n", 0)
+            if not n:
+                shutil.rmtree(data_dir)
+        else:
+            # first evaluation here, or the last one did not fire (an
+            # alert's common case): count first, and write only on a
+            # hit — a count is cheaper than an empty write plus delete
+            n = out.count()
+            if n:
+                out.write.mode("overwrite").parquet(data_dir)
+        self._monitor_fired[mname] = bool(n)
+        if not n:
+            commit = None
         os.makedirs(commits_dir, exist_ok=True)
         tmp = os.path.join(commits_dir, f".tmp-{manifest_name}")
         with open(tmp, "w") as fh:

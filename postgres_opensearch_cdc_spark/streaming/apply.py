@@ -44,6 +44,30 @@ def _require_merge_columns(batch: DataFrame, key_cols, seq_cols, op_col) -> None
         )
 
 
+def _fold_max_seq(prev: dict | None, new: dict) -> dict:
+    """A sequence high-water mark raised to ``new``'s per-column maxima,
+    never lowered. Only JSON-storable scalar seq types participate (the
+    engine's long offsets; a timestamp seq leaves no mark and is
+    compared via live rows instead)."""
+    out = dict(prev or {})
+    for c, v in new.items():
+        if isinstance(v, (int, float, str)) and (out.get(c) is None or v > out[c]):
+            out[c] = v
+    return out
+
+
+def observed_metrics(obs) -> dict:
+    """An ``Observation``'s metrics once its action has run; ``{}``
+    when the optimizer proved the observed input empty and pruned the
+    observation with it (an empty relation folded through an
+    aggregate above it), which means no row flowed. Spark then
+    completes the observation with an empty row, on which
+    ``Observation.get`` fails. An empty rollup delta reaches this case
+    (its ``groupBy`` sits above the observation); the rollup tests pin
+    it."""
+    return obs.get if obs._jo.getRow().length() else {}
+
+
 def start_mirror_stream(
     changes: DataFrame,
     sink: VersionedMirrorSink,
@@ -143,6 +167,17 @@ class VersionedMirrorSink:
     commit here re-buckets every row the same way. An explicit
     ``num_buckets=N`` pins the layout instead (and must match the
     manifest's).
+
+    Jobs per commit: the merge write, plus a touched-bucket stats job
+    (``groupBy("_bucket")`` collect) only where a bucket can be pruned —
+    a later commit that keeps a layout of more than one bucket, or a
+    ``bucket_expr`` one. The first commit, a one-bucket layout and a
+    re-bucketing commit rewrite every mapped bucket anyway, so they run
+    no stats job and take the batch's sequence maxima from an
+    observation on the write. One consequence: an EMPTY batch on such
+    a layout still rewrites its bucket, so callers keep their own
+    emptiness guards (``CdcEngine.bulk``'s ``if rows``, the
+    ``*_by_query`` writes' ``if n``, the routed stream's ``isEmpty()``).
 
     Building a snapshot frame (read(), and the merge's touched-bucket
     slice) launches no Spark job: the manifest's schema is passed to
@@ -339,61 +374,39 @@ class VersionedMirrorSink:
         num_buckets, rebucket = self._layout(spark, manifest, sizes)
         batch = batch.withColumn("_bucket", self._bucket(num_buckets))
         obs = None
-        if manifest is None:
-            # FIRST commit: no current slice to prune, and the manifest
-            # bucket map is rebuilt from the write's own output dirs —
-            # the only thing the stats job contributes is the sequence
-            # high-water mark (global max per seq col, deletes
-            # included). Fold that into the merge write itself via
-            # observe() instead of running a separate full pass over
-            # the batch (r15, one fewer Spark job per mirror
-            # bootstrap; the observation sits UPSTREAM of the merge
-            # window's survivor filter, so deleted rows still raise
-            # the mark exactly as the stats job did).
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            batch = batch.observe(
-                obs, *[F.max(F.col(c)).alias(c) for c in self.seq_cols]
-            )
-            touched: list = []
-        else:
-            # bounded driver-side listing: ≤ num_buckets rows. The same
-            # job also returns per-bucket seq maxima, folded below into
-            # the manifest's sequence high-water mark (max seq EVER
-            # merged, deletes included) — what lets a bulk/REST write
-            # allocate sequence numbers above every consumed stream
-            # offset even after a high-seq delete left no live row
-            # behind. (The stats scan is column-pruned to _bucket +
-            # seq cols; the merge needs the touched list BEFORE its
-            # plan exists, so the two passes cannot fuse here.)
+        if (manifest is not None and not rebucket
+                and (self.bucket_expr is not None or num_buckets > 1)):
+            # the touched-bucket stats job: a bounded driver-side list
+            # (<= num_buckets rows) that picks the slice to merge. It
+            # must run before the merge's plan exists, so it is a job
+            # of its own; its per-bucket seq maxima feed the high-water
+            # mark below.
             stats = (
                 batch.groupBy("_bucket")
                 .agg(*[F.max(c).alias(c) for c in self.seq_cols])
                 .collect()
             )
             touched = sorted(r["_bucket"] for r in stats)
-            if rebucket:
-                # the count grew, or the old one is unrecorded: every
-                # mapped bucket is rewritten under the new one (the
-                # slice below re-buckets its rows)
-                touched = sorted(int(b) for b in manifest["buckets"])
-        prev_hwm = dict((manifest or {}).get("max_seq") or {})
-        max_seq: dict = dict(prev_hwm)
-        if manifest is not None:
-            for c in self.seq_cols:
-                vals = [r[c] for r in stats if r[c] is not None]
-                # only JSON-storable scalar seq types participate (the
-                # engine's long offsets; timestamp seqs are compared via
-                # live rows instead)
-                vals = [v for v in vals if isinstance(v, (int, float, str))]
-                if not vals:
-                    continue
-                batch_max = max(vals)
-                prev = prev_hwm.get(c)
-                max_seq[c] = batch_max if prev is None or batch_max > prev else prev
+            batch_max = {
+                c: max((r[c] for r in stats if r[c] is not None), default=None)
+                for c in self.seq_cols
+            }
+        else:
+            # nothing to prune: the first commit, a one-bucket layout
+            # or a re-bucketing commit rewrites every mapped bucket
+            # anyway, so the slice is all of them (the re-bucketing
+            # slice is re-hashed below) and the batch's seq maxima are
+            # observed on the merge write itself — upstream of the
+            # survivor filter, so deletes still raise the mark
+            from pyspark.sql import Observation
+
+            obs = Observation()
+            batch = batch.observe(
+                obs, *[F.max(F.col(c)).alias(c) for c in self.seq_cols]
+            )
+            touched = sorted(int(b) for b in (manifest or {}).get("buckets", ()))
         unioned = batch
-        if manifest is not None:
+        if touched:
             current = self._read_manifest_slice(spark, manifest, buckets=touched)
             if current is not None:
                 as_changes = (
@@ -435,11 +448,14 @@ class VersionedMirrorSink:
         commit_id = f"commit-{version:08d}-{uuid.uuid4().hex[:8]}"
         commit_dir = os.path.join(self._data_dir, commit_id)
         merged.write.partitionBy("_bucket").parquet(commit_dir)
-        if obs is not None:
-            # first-commit high-water mark, observed on the write job
-            for c, v in obs.get.items():
-                if isinstance(v, (int, float, str)):
-                    max_seq[c] = v
+        # the sequence high-water mark: max seq EVER merged, deletes
+        # included, never lowered — what lets a bulk/REST write allocate
+        # sequence numbers above every consumed stream offset even after
+        # a high-seq delete left no live row behind
+        max_seq = _fold_max_seq(
+            (manifest or {}).get("max_seq"),
+            observed_metrics(obs) if obs is not None else batch_max,
+        )
         # buckets that survived the merge: a driver listing of the fresh
         # commit dir (no extra Spark job, no collect)
         out_buckets = {
@@ -486,12 +502,7 @@ class VersionedMirrorSink:
         manifest = self.latest_manifest()
         if manifest is None:
             raise FileNotFoundError(f"no committed snapshot under {self.path}")
-        merged = dict(manifest.get("max_seq") or {})
-        for c, v in max_seq.items():
-            if not isinstance(v, (int, float, str)):
-                continue
-            prev = merged.get(c)
-            merged[c] = v if prev is None or v > prev else prev
+        merged = _fold_max_seq(manifest.get("max_seq"), max_seq)
         version = manifest["version"] + 1
         tmp = os.path.join(self._commits_dir, f".tmp-v{version:08d}.json")
         final = os.path.join(self._commits_dir, f"v{version:08d}.json")
@@ -881,7 +892,20 @@ class RollupSink:
                 "different modulus would miss bucket dirs"
             )
         metric_cols = self._metric_cols
-        agg = deltas.groupBy(*self._groups).agg(
+        main_in = deltas
+        obs = None
+        if self.minmax_cols:
+            # each minmax column's non-null delta count, observed on the
+            # main write below (it runs first): a column with none
+            # carries its aux store forward with no probe and no write
+            from pyspark.sql import Observation
+
+            obs = Observation()
+            main_in = deltas.observe(obs, *[
+                F.count(F.col(f"mmval_{c}")).alias(c)
+                for c in self.minmax_cols
+            ])
+        agg = main_in.groupBy(*self._groups).agg(
             *[F.sum(c).alias(c) for c in metric_cols]
         )
         if manifest is not None:
@@ -901,6 +925,7 @@ class RollupSink:
         aux_schemas = {}
         aux_buckets = {}
         legacy = manifest is not None and "aux_buckets" not in manifest
+        deltas_per_col = observed_metrics(obs) if obs is not None else {}
         for c in self.minmax_cols:
             delta = (
                 deltas
@@ -912,23 +937,7 @@ class RollupSink:
                 )
             )
             old_map = (manifest or {}).get("aux_buckets", {}).get(c, {})
-            if old_map or legacy:
-                # one micro-batch's distinct bucket list — bounded by
-                # aux_num_buckets, the span store's driver-side pattern
-                touched = sorted(
-                    r["b"] for r in delta.select(
-                        self._aux_bucket_expr(F.col("value")).alias("b")
-                    ).distinct().collect()
-                )
-            else:
-                # nothing to prune or carry (first commit, or every
-                # prior bucket emptied): the touched list only gates
-                # which OLD buckets merge, so the probe job is pure
-                # overhead here — the write below derives the actual
-                # bucket map from its own output dirs (r15, one fewer
-                # Spark job per single-batch rollup entry)
-                touched = None
-            if touched == [] and not legacy:
+            if not deltas_per_col.get(c) and not legacy:
                 # no ±delta for this column: carry the bucket map and
                 # schema forward — zero aux I/O this commit
                 aux_buckets[c] = old_map
@@ -942,14 +951,24 @@ class RollupSink:
                 # the bucketed layout (every bucket rewritten once)
                 aux = self._read_aux(spark, manifest, c).unionByName(delta)
                 carried = {}
-            else:
-                aux = delta
-                if manifest is not None and old_map:
-                    aux = self._read_aux(
-                        spark, manifest, c, buckets=touched
-                    ).unionByName(delta)
+            elif old_map:
+                # one micro-batch's distinct bucket list — bounded by
+                # aux_num_buckets, the span store's driver-side pattern
+                touched = {
+                    r["b"] for r in delta.select(
+                        self._aux_bucket_expr(F.col("value")).alias("b")
+                    ).distinct().collect()
+                }
+                aux = self._read_aux(
+                    spark, manifest, c, buckets=sorted(touched)
+                ).unionByName(delta)
                 carried = {b: cm for b, cm in old_map.items()
-                           if int(b) not in set(touched or ())}
+                           if int(b) not in touched}
+            else:
+                # nothing to prune or carry (first commit, or every
+                # prior bucket emptied): the write below derives the
+                # bucket map from its own output dirs
+                aux, carried = delta, {}
             # ONE exchange for both the multiset aggregation and the
             # bucket clustering (r15, guide §2.4): bucket =
             # pmod(xxhash64(groups..., value), nb) is a function of

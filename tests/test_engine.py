@@ -1547,3 +1547,86 @@ def test_evaluate_monitors_with_batch_id_is_exactly_once(spark, tmp_path):
     assert engine.alerts("blocked2").count() == 3
     # _cat-style counts read straight from the commit manifests
     assert engine.alert_counts() == {"blocked2": 3}
+
+
+def test_monitor_evaluation_runs_one_pass(spark, tmp_path):
+    """A monitor whose last evaluation fired writes its alert frame in
+    one pass, counting the rows on that write (2 jobs). With no last
+    outcome (the engine's first evaluation) it counts first and then
+    writes (4 jobs); a replay of the same (writer, batch) runs none."""
+    from tests.test_versioned_mirror import jobs_launched
+
+    engine = CdcEngine(spark=spark, workdir=str(tmp_path))
+    engine.register_table("card", CARD_SCHEMA)
+    engine.backfill("card", spark.createDataFrame(
+        [(1, "BLOCKED", "DEBIT"), (2, "BLOCKED", "CREDIT")], CARD_SCHEMA))
+    engine.put_monitor(
+        "blocked2", "card",
+        {"aggs": {"st": {"terms": {"field": "status"}}}},
+        "st = 'BLOCKED' AND doc_count >= 2",
+    )
+    fired, jobs = jobs_launched(spark, lambda: engine.evaluate_monitors(batch_id=3))
+    assert fired == {"blocked2": 1}
+    assert jobs == 4
+    fired, jobs = jobs_launched(spark, lambda: engine.evaluate_monitors(batch_id=4))
+    assert fired == {"blocked2": 1}
+    assert jobs == 2
+    fired, jobs = jobs_launched(spark, lambda: engine.evaluate_monitors(batch_id=4))
+    assert fired == {"blocked2": 1}
+    assert jobs == 0
+    assert engine.alerts("blocked2").count() == 2
+
+
+def test_non_firing_monitor_leaves_no_data_dir(spark, tmp_path):
+    """A non-firing evaluation commits ``commit: None`` and leaves no
+    directory under the log's data dir; the log over a mix of firing
+    and non-firing batches holds exactly the firing batches' rows."""
+    import glob
+
+    from tests.test_versioned_mirror import jobs_launched
+
+    engine = CdcEngine(spark=spark, workdir=str(tmp_path))
+    engine.register_table("card", CARD_SCHEMA)
+    engine.backfill("card", spark.createDataFrame(
+        [(1, "BLOCKED", "DEBIT"), (2, "ACTIVE", "CREDIT")], CARD_SCHEMA))
+    engine.put_monitor(
+        "blocked2", "card",
+        {"aggs": {"st": {"terms": {"field": "status"}}}},
+        "st = 'BLOCKED' AND doc_count >= 2",
+    )
+    data_dir = str(tmp_path / "alerts_blocked2" / "data")
+    commits = str(tmp_path / "alerts_blocked2" / "_commits")
+    # no firing evaluation before: count only, nothing written
+    fired, jobs = jobs_launched(spark, lambda: engine.evaluate_monitors(batch_id=0))
+    assert fired == {"blocked2": 0}
+    assert jobs == 2
+    assert not glob.glob(os.path.join(data_dir, "*"))
+    with open(os.path.join(commits, "wadhoc-b0.json")) as fh:
+        assert json.load(fh) == {"count": 0, "commit": None,
+                                 "batch_id": 0, "writer_id": None}
+
+    engine.bulk("card", [{"index": {"id": 2, "status": "BLOCKED", "card_type": "CREDIT"}}])
+    assert engine.evaluate_monitors(batch_id=1) == {"blocked2": 1}
+    assert len(glob.glob(os.path.join(data_dir, "*"))) == 1
+    # after a firing evaluation the one-pass write runs; it fires not,
+    # so its empty dir is removed and the entry commits no data
+    engine.bulk("card", [{"delete": {"id": 1}}])
+    fired, jobs = jobs_launched(spark, lambda: engine.evaluate_monitors(batch_id=2))
+    assert fired == {"blocked2": 0}
+    assert jobs == 2
+    assert len(glob.glob(os.path.join(data_dir, "*"))) == 1
+    with open(os.path.join(commits, "wadhoc-b2.json")) as fh:
+        assert json.load(fh)["commit"] is None
+    engine.bulk("card", [{"index": {"id": 1, "status": "BLOCKED", "card_type": "DEBIT"}}])
+    assert engine.evaluate_monitors(batch_id=3) == {"blocked2": 1}
+    assert engine.evaluate_monitors() == {"blocked2": 1}
+
+    assert len(glob.glob(os.path.join(data_dir, "*"))) == 3
+    rows = sorted(
+        tuple(r) for r in engine.alerts("blocked2")
+        .select("monitor", "batch_id", "st", "doc_count").collect()
+    )
+    assert rows == [("blocked2", -1, "BLOCKED", 2),
+                    ("blocked2", 1, "BLOCKED", 2),
+                    ("blocked2", 3, "BLOCKED", 2)]
+    assert engine.alert_counts() == {"blocked2": 3}

@@ -967,3 +967,46 @@ def test_rollup_aux_num_buckets_persists_across_restart(spark, tmp_path):
             "nb", log_dir, "txn", "status", minmax_cols=("amount",),
             aux_num_buckets=8,
         )
+
+
+def test_rollup_all_null_minmax_first_commit_writes_no_aux(spark, tmp_path):
+    """A minmax column with no non-null delta in a commit carries its
+    aux store forward with no I/O — also on the first commit, which
+    then writes no ``mm_<c>`` dir; the rollup reads back with null
+    extrema, and a later non-null delta starts the aux store."""
+    sink = _mk_sink(tmp_path, nb=4)
+    _apply(spark, sink, [(1, "A", None), (2, "B", None), (3, "A", None)], 0)
+    m1 = sink.latest_manifest()
+    assert os.listdir(os.path.join(sink._data_dir, m1["commit"])) == ["main"]
+    assert m1["aux_buckets"] == {"amount": {}}
+    assert sorted(tuple(r) for r in sink.read(spark).collect()) == [
+        ("A", 2, None, None), ("B", 1, None, None),
+    ]
+
+    _apply(spark, sink, [(4, "A", 3.0), (5, "A", 9.0)], 1)
+    m2 = sink.latest_manifest()
+    assert "mm_amount" in os.listdir(os.path.join(sink._data_dir, m2["commit"]))
+    assert _minmax(spark, sink) == {"A": (3.0, 9.0), "B": (None, None)}
+    assert sorted(tuple(r) for r in sink.read(spark).collect()) == [
+        ("A", 4, 3.0, 9.0), ("B", 1, None, None),
+    ]
+
+
+def test_rollup_empty_delta_commits_and_carries_forward(spark, tmp_path):
+    """An empty delta frame (an empty micro-batch) still commits: the
+    optimizer proves the input empty and prunes the observation on the
+    main write, which reads as no delta for any minmax column, so the
+    aux store is carried forward and the rollup reads back unchanged."""
+    sink = _mk_sink(tmp_path, nb=4)
+    _apply(spark, sink, [(1, "A", 3.0), (2, "B", 7.0), (3, "A", 9.0)], 0)
+    m1 = sink.latest_manifest()
+    before = sorted(tuple(r) for r in sink.read(spark).collect())
+
+    _apply(spark, sink, [], 1)
+    m2 = sink.latest_manifest()
+    assert m2["version"] == m1["version"] + 1 and m2["batch_id"] == 1
+    assert m2["aux_buckets"] == m1["aux_buckets"]
+    assert m2["aux_schemas"] == m1["aux_schemas"]
+    assert "mm_amount" not in os.listdir(os.path.join(sink._data_dir, m2["commit"]))
+    assert sorted(tuple(r) for r in sink.read(spark).collect()) == before
+    assert _minmax(spark, sink) == {"A": (3.0, 9.0), "B": (7.0, 7.0)}

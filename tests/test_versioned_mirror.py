@@ -227,12 +227,16 @@ def jobs_launched(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-# A non-first apply_batch runs the touched-bucket stats collect and the
-# merge write, each a shuffle-map job plus a result job under AQE. The
-# slice read of the touched buckets adds none: it takes the manifest's
-# schema (no footer job) and lists at most the listing threshold of
-# dirs per relation serially in-process (no listing job).
-APPLY_BATCH_JOBS = 4
+# A non-first apply_batch on a pruning layout (more than one bucket)
+# runs the touched-bucket stats collect and the merge write, each a
+# shuffle-map job plus a result job under AQE. The slice read of the
+# touched buckets adds none: it takes the manifest's schema (no footer
+# job) and lists at most the listing threshold of dirs per relation
+# serially in-process (no listing job).
+PRUNING_LAYOUT_APPLY_BATCH_JOBS = 4
+# On a one-bucket layout there is nothing to prune: the stats job is
+# skipped and the sequence maxima are observed on the merge write.
+ONE_BUCKET_APPLY_BATCH_JOBS = 2
 
 
 def test_snapshot_reads_launch_no_jobs(spark, tmp_path):
@@ -262,7 +266,7 @@ def test_snapshot_reads_launch_no_jobs(spark, tmp_path):
         ),
         batch_id=2,
     ))
-    assert jobs == APPLY_BATCH_JOBS
+    assert jobs == PRUNING_LAYOUT_APPLY_BATCH_JOBS
     manifest = sink.latest_manifest()
     assert len(manifest["buckets"]) == 64
     assert len(set(manifest["buckets"].values())) >= 3
@@ -284,6 +288,72 @@ def test_snapshot_reads_launch_no_jobs(spark, tmp_path):
     )
     assert dict(old.select("id", "status").collect())[15] == "B"
     assert [r["id"] for r in page.collect()] == [0, 3, 6, 9, 12]
+
+
+def test_one_bucket_apply_batch_runs_only_the_write(spark, tmp_path):
+    """A later commit on a one-bucket mirror runs no stats job: only
+    the merge write's two jobs, and the merge is still correct."""
+    sink = VersionedMirrorSink(
+        path=str(tmp_path / "one"), key_cols=["id"], seq_cols=["offset"]
+    )
+    sink.apply_batch(chg(spark, [("c", i, f"v{i}", i) for i in range(50)]), 0)
+    _, jobs = jobs_launched(spark, lambda: sink.apply_batch(
+        chg(spark, [("u", 3, "new", 100), ("d", 4, None, 101)]), 1
+    ))
+    assert jobs == ONE_BUCKET_APPLY_BATCH_JOBS
+    m = sink.latest_manifest()
+    assert m["num_buckets"] == 1 and list(m["buckets"]) == ["0"]
+    assert m["max_seq"] == {"offset": 101}
+    state = dict(sink.read(spark).select("id", "v").collect())
+    assert len(state) == 49 and state[3] == "new" and 4 not in state
+
+
+def test_one_bucket_high_water_mark_is_folded_never_lowered(spark, tmp_path):
+    """On a one-bucket mirror the batch's seq maxima come from an
+    observation on the merge write; they fold into the previous mark:
+    a batch below it leaves it, a delete above it raises it (and the
+    key goes), and a bulk write then allocates above the delete."""
+    from postgres_opensearch_cdc_spark.engine import CdcEngine
+
+    engine = CdcEngine(spark=spark, workdir=str(tmp_path))
+    engine.register_table("t", T.StructType.fromDDL("id long, v string"))
+    sink = engine.tables["t"].sink
+    sink.apply_batch(chg(spark, [("c", 1, "a", 100), ("c", 2, "b", 40)]), 0)
+    assert sink.latest_manifest()["max_seq"] == {"offset": 100}
+
+    sink.apply_batch(chg(spark, [("u", 2, "b2", 60)]), 1)
+    m = sink.latest_manifest()
+    assert m["num_buckets"] == 1
+    assert m["max_seq"] == {"offset": 100}
+    assert dict(sink.read(spark).select("id", "v").collect()) == {1: "a", 2: "b2"}
+
+    sink.apply_batch(chg(spark, [("d", 2, None, 500)]), 2)
+    assert sink.latest_manifest()["max_seq"] == {"offset": 500}
+    assert dict(sink.read(spark).select("id", "v").collect()) == {1: "a"}
+    assert engine._seq_high_water("t") == 500
+
+    engine.bulk("t", [{"index": {"id": 3, "v": "c"}}, {"index": {"id": 1, "v": "a2"}}])
+    seqs = dict(engine.view("t").select("id", "offset").collect())
+    assert seqs[3] > 500 and seqs[1] > 500
+    assert dict(engine.view("t").select("id", "v").collect()) == {1: "a2", 3: "c"}
+
+
+def test_one_bucket_empty_batch_keeps_mark_and_view(spark, tmp_path):
+    """An empty batch on a one-bucket mirror still commits (it rewrites
+    the bucket), but the observation on its merge write sees no
+    sequence value, so the mark is kept as it was and the view's rows
+    are unchanged."""
+    sink = VersionedMirrorSink(
+        path=str(tmp_path / "one"), key_cols=["id"], seq_cols=["offset"]
+    )
+    sink.apply_batch(chg(spark, [("c", 1, "a", 100), ("c", 2, "b", 40)]), 0)
+    sink.apply_batch(chg(spark, []), 1)
+    m = sink.latest_manifest()
+    assert m["version"] == 2 and m["num_buckets"] == 1
+    assert m["max_seq"] == {"offset": 100}
+    assert sorted(
+        tuple(r) for r in sink.read(spark).select("id", "v", "offset").collect()
+    ) == [(1, "a", 100), (2, "b", 40)]
 
 
 def test_read_null_fills_commits_before_added_column(spark, sink):
