@@ -97,27 +97,28 @@ _MODULES = [
 # entries by their LATEST fully-green CORRECTNESS round, oldest first,
 # ties in queries() order.  tests/test_staleness_window.py checks the result.
 _PRIORITY = [
-    # implementation changed this ROUND-15 optimization round —
-    # re-certify through the driver's oracle gate, riskiest rewrites
-    # first (numpy candidate/verify passes, sink job-count cuts,
-    # shared-substrate memos; every one is value-identical by parity
-    # at sf0.001/0.01/0.1 locally — this window makes the DRIVER
-    # confirm it)
-    "dedup_embedding_srp",        # numpy popcount cands + pair dots
-    "dedup_semantic_keep",        # cluster-local numpy pair dots
-    "dedup_lsh_capped",           # lazy banded shape (r14 regression)
-    "engine_rollup_metrics",      # aux one-exchange + probe skip
-    "engine_rollup_search",       # same aux path + coarser re-agg
-    "engine_rollup_two_dim",      # same, multi-dimension
-    "engine_search_mirror",       # first-commit observe() high-water
-    "dedup_span_trim_stream",     # overlapped per-batch writes
-    "dedup_semantic_stream",      # overlapped per-batch writes
-    "search_eval_metrics",        # legs memo + factored fusion
-    "quality_kneser_ney",         # pinned pairs/types relations
-    "dedup_span_doc_stats",       # shared maximal-span frame
-    "dedup_ngram_jaccard",        # memoized truth set
-    "search_rank_rbo",            # legs memo
-    "quality_ccnet_buckets",      # pinned bigram relation
+    # the mirror sink under every engine_* entry was rewritten since the
+    # last CORRECTNESS round (manifest-built reads, one keyed mirror,
+    # derived bucket count, one pass per commit, one-pass monitor
+    # writes) — re-certify through the oracle gate, riskiest first
+    "engine_bulk_mirror",           # REST writes beside the stream
+    "engine_update_delete_search",  # *_by_query writes, empty skips
+    "engine_snapshot_restore",      # carried high-water mark
+    "engine_search_mirror",         # observed high-water mark
+    "engine_reindex_script",        # reindex into a fresh mirror
+    "engine_monitor_stream_alerts", # one-pass monitor writes
+    "engine_knn_index_search",      # seq-delta over the new mirror
+    "engine_rollup_metrics",        # staged-envelope memo + rollups
+    "engine_rollup_search",
+    "engine_rollup_two_dim",
+    "engine_rollup_stream",
+    "engine_rollup_date_histogram",
+    # one consumer each of the riskiest memos now routed through
+    # registry.memo (the rollups above read the envelope stage; the
+    # other memos' consumers fall to the staleness tail)
+    "dedup_cc_clusters",            # nested build: clusters → pairs
+    "dedup_containment_join",       # parameterized prefix substrate
+    "kmeans_clusters",              # k-means centroid memo
 ]
 # how many leading window rows are hand-staged; the staleness tool
 # fills the rest of the 50

@@ -105,76 +105,6 @@ def main() -> None:
     print(f"index build (5 persisted ANN indexes, cold): "
           f"{index_build_sec}s", file=progress, flush=True)
 
-    # Session-memo pre-build, timed as its OWN field (r10 verdict ask
-    # #8): the dedup pair/cluster materialization is shared by design
-    # across the dedup family, so whichever family entry ran FIRST in
-    # the positional order used to absorb the whole build (~7 s) while
-    # the rest reported memo hits — a window rotation could move ~3 s
-    # of headline total with zero plan change. Building the memo HERE,
-    # before pass 1, makes every family entry a hit in BOTH passes
-    # (rotation-stable headline) and reports the one-off build cost as
-    # memo_build_sec, the same separate-field treatment as
-    # knn_serve_latency_sec. The tagged entries' positional numbers
-    # are memo-HIT times; their cold pipeline cost IS memo_build_sec.
-    from postgres_opensearch_cdc_spark.queries import extensions as _ext
-    from postgres_opensearch_cdc_spark.queries import graph_dedup as _gd
-    from postgres_opensearch_cdc_spark.queries import (
-        training_pipeline3 as _tp3,
-    )
-    from postgres_opensearch_cdc_spark.queries import (
-        training_pipeline5 as _tp5,
-    )
-    from postgres_opensearch_cdc_spark.queries import (
-        training_pipeline8 as _tp8,
-    )
-
-    t0 = time.perf_counter()
-    _ext.dedup_minhash_lsh(spark, sf_dir).count()   # verified pair set
-    _gd._doc_clusters(spark, sf_dir).count()        # connected comps
-    _tp3._bpe_merges(spark, sf_dir)                 # BPE merge list
-    _tp3._bpe_merges_local(spark, sf_dir)           # r12 local trainer
-    _tp5._wp_merges(spark, sf_dir)                  # WordPiece merges
-    _tp8.prefix_substrate(spark, sf_dir, 3)         # r15: shared
-    # prefix-index substrate of the prefix-filter + containment joins
-    from postgres_opensearch_cdc_spark.queries import cdc_queries as _cq
-
-    _cq._staged_envelopes(spark, sf_dir)            # r15: the rollup
-    # entries' shared normalized-envelope changelog staging (each
-    # entry still parses + streams it through its own checkpoint)
-    _ext.dedup_ngram_jaccard(spark, sf_dir).count()  # r15: exact
-    # all-pairs truth set, shared with dedup_lsh_recall_audit
-    from postgres_opensearch_cdc_spark.queries import hybrid as _hy
-
-    _hy._legs(spark, sf_dir)                        # r15: the hybrid
-    # family's shared BM25 + vector-top-k legs (each entry still pays
-    # its own fusion/metric work)
-    _ext._corpus_spans(spark, sf_dir).count()       # r15: the maximal
-    # duplicated-span frame shared by the span report + doc stats
-    memo_build_sec = round(time.perf_counter() - t0, 3)
-    print(f"memo build: {memo_build_sec}s", file=progress, flush=True)
-    # (bpe_apply_tokens / bpe_apply_tokens_arrow /
-    # wordpiece_apply_longest are NOT tagged: they consume the
-    # memoized merge list but their corpus encode pass is real
-    # per-run work)
-    MEMOIZED = {"dedup_minhash_lsh", "dedup_cc_clusters",
-                "dedup_cc_survivors", "dedup_quality_survivors",
-                "dedup_edit_distance",
-                "bpe_train_merges", "bpe_train_merges_local",
-                "wordpiece_train_scores",
-                # r15: the shared prefix-index substrate (pos/arrs) is
-                # memoized per (app, sf_dir, n); these two entries'
-                # positional numbers are candidate-join + verify cost
-                # on a memo HIT — the substrate build is memo_build_sec
-                "dedup_prefix_filter_join", "dedup_containment_join",
-                # r15: the exact all-pairs truth set is memoized and
-                # shared with dedup_lsh_recall_audit; both entries'
-                # positional numbers are memo-HIT reads
-                "dedup_ngram_jaccard", "dedup_lsh_recall_audit",
-                # r15: the maximal-span frame is memoized (shared with
-                # dedup_span_doc_stats, which still pays its own
-                # per-doc aggregate + token-count join)
-                "dedup_duplicate_spans"}
-
     # TWO full positional passes, per-entry MIN reported (round-8
     # verdict ask #3): a single pass is exposed to ambient host load
     # (±13% round-over-round swings on unchanged code, two rounds
@@ -184,24 +114,47 @@ def main() -> None:
     # warm-median block. (The persisted-index ANN entries' pass-2
     # number measures a query against an existing index, which is
     # exactly their build-once / query-many contract.)
+    #
+    # Session memos (registry.memo) are built by whichever entry reads
+    # one first in pass 1 and hit in pass 2, so min(pass1, pass2) keeps
+    # the headline rotation-stable. The builds the memo recorded during
+    # pass 1 are reported as memo_build_sec, and "memoized" tags the
+    # entries that read a memo, whose numbers are memo-HIT times.
+    from postgres_opensearch_cdc_spark.registry import (
+        MEMO_BUILD_SEC,
+        MEMO_READS,
+    )
+
+    built_before = MEMO_BUILD_SEC.copy()
+    memoized: list[str] = []
     passes: list[dict[str, float]] = []
     for pass_i in range(2):
         pass_t: dict[str, float] = {}
         for name, fn in qs.items():
+            reads = MEMO_READS.total()
             t0 = time.perf_counter()
             try:
-                df = fn(spark, sf_dir)
-                n = len(df.collect())
+                n = len(fn(spark, sf_dir).collect())
+                dt = round(time.perf_counter() - t0, 2)
+                print(f"pass{pass_i} {name}: {dt}s ({n} rows)",
+                      file=progress, flush=True)
             except Exception as e:  # record failures as negative sentinel
                 print(f"bench error in {name} (pass {pass_i}): {e}",
                       file=progress, flush=True)
-                pass_t[name] = -1.0
-                continue
-            dt = round(time.perf_counter() - t0, 2)
+                dt = -1.0
             pass_t[name] = dt
-            print(f"pass{pass_i} {name}: {dt}s ({n} rows)",
-                  file=progress, flush=True)
+            if pass_i == 0 and MEMO_READS.total() > reads:
+                memoized.append(name)
         passes.append(pass_t)
+        if pass_i == 0:
+            memo_build = {
+                m: round(sec - built_before[m], 3)
+                for m, sec in MEMO_BUILD_SEC.items()
+                if sec > built_before[m]
+            }
+            memo_build_sec = round(sum(memo_build.values()), 3)
+            print(f"memo builds (pass 0): {memo_build_sec}s {memo_build}",
+                  file=progress, flush=True)
     timings: dict[str, float] = {}
     total = 0.0
     for name in passes[0]:
@@ -209,7 +162,7 @@ def main() -> None:
         if t1 < 0 or t2 < 0:
             timings[name] = -1.0
             continue
-        timings[name] = min(t1, t2)  # memo entries: hit in both passes
+        timings[name] = min(t1, t2)  # memo entries: pass 2 hits
         total += timings[name]
 
     # isolated warm re-measure of the 50 heaviest entries (top-10
@@ -223,8 +176,8 @@ def main() -> None:
     # repeat measures the engine's REPEAT cost — entries backed by a
     # session-level memo (dedup_minhash_lsh's localCheckpointed pair
     # set, shared with the connected-components entries by design)
-    # report the memo-hit cost here; their cold pipeline cost is the
-    # positional number above. The top-10 stay on stdout (2,000 B
+    # report the memo-hit cost here, as they do positionally; their
+    # cold build is memo_build_sec. The top-10 stay on stdout (2,000 B
     # budget); the full top-50 map goes to the SIDECAR file next to
     # this script (BENCH_SIDECAR.json, override via
     # $SPARK_GRAFT_BENCH_SIDECAR) keyed by order_md5 so drift between
@@ -291,6 +244,11 @@ def main() -> None:
             # NAME across order rotations; stdout stays byte-capped.
             "queries_cs_by_name": {n: int(round(timings[n] * 100))
                                    for n in q_names},
+            # the entries that read a session memo in pass 1, and the
+            # seconds each memo's pass-1 build took (these sum to
+            # memo_build_sec)
+            "memoized": memoized,
+            "memo_build_sec_by_name": memo_build,
         }, f, indent=1, sort_keys=True)
         f.write("\n")
 
@@ -306,7 +264,7 @@ def main() -> None:
         # cold-build cost is memo_build_sec, kept out of the headline
         # so window rotations can't move the total
         "passes": 2,
-        "memoized": sorted(MEMOIZED & set(timings)),
+        "memoized": memoized,
         "memo_build_sec": memo_build_sec,
         # one-off cold build of the 5 persisted ANN serving indexes
         # (cleared from $TMPDIR above; includes each entry's first

@@ -680,7 +680,8 @@ class CdcEngine:
         return self.tables[name]
 
     def view(self, name: str, version: int | None = None) -> DataFrame:
-        """The always-current mirror as a DataFrame. An alias resolves
+        """The always-current mirror as a DataFrame (empty before the
+        table's first commit). An alias resolves
         to the union of its member mirrors (missing columns
         null-filled — the multi-index dynamic-mapping behavior).
         ``version`` time-travels the mirror to an older committed
@@ -693,7 +694,18 @@ class CdcEngine:
             for d in dfs[1:]:
                 out = out.unionByName(d, allowMissingColumns=True)
             return out
-        return self.tables[name].sink.read(self.spark, version=version)
+        handle = self.tables[name]
+        try:
+            return handle.sink.read(self.spark, version=version)
+        except FileNotFoundError:
+            if version is not None or handle.sink.exists():
+                raise
+        # registered, nothing committed yet: an index with no documents,
+        # typed as its first commit will be
+        fields = [T.StructField("op", T.StringType()), *handle.schema.fields]
+        if self.seq_col not in handle.schema.fieldNames():
+            fields.append(T.StructField(self.seq_col, T.LongType()))
+        return self.spark.createDataFrame([], T.StructType(fields))
 
     def search(self, name: str, body: dict,
                id_col: str | None = None) -> DataFrame:

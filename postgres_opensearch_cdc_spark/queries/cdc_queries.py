@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from postgres_opensearch_cdc_spark.cdc.apply import compact_changelog, op_stats
 from postgres_opensearch_cdc_spark.cdc.envelope import OP_DELETE, events_as_changelog
-from postgres_opensearch_cdc_spark.registry import load_table
+from postgres_opensearch_cdc_spark.registry import load_table, memo
 
 
 def cdc_mirror_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -751,29 +751,23 @@ def _normalized_events_envelopes(spark: SparkSession, sf_dir: str):
 # The normalized envelope changelog is IDENTICAL bytes for every
 # rollup/monitor entry (same events table, same transformation) — the
 # _rollup_engine docstring has always called it "shared scaffolding".
-# Stage it ONCE per (application, sf_dir) and hand each entry a fresh
-# private dir of hardlinks (r15): the entries keep their isolation
+# Stage it ONCE per session memo and hand each entry a fresh private
+# dir of hardlinks: the entries keep their isolation
 # (engine_monitor_stream_alerts appends a kick file to ITS dir without
 # polluting siblings) and their declared work — parsing the Debezium
 # JSON through a real checkpointed stream — while the 8-entry family
 # stops re-deriving and re-writing the same ~1 s changelog per entry.
-# Disclosed like the other session memos (bench.py pre-builds it, the
-# cost is part of memo_build_sec).
-_ENVELOPE_STAGE: dict = {}
-
-
 def _staged_envelopes(spark: SparkSession, sf_dir: str) -> str:
+    return memo(spark, sf_dir, "staged_envelopes", _stage_envelopes)
+
+
+def _stage_envelopes(spark: SparkSession, sf_dir: str) -> str:
     import tempfile
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _ENVELOPE_STAGE.get(key)
-    if hit is not None:
-        return hit
     stage = tempfile.mkdtemp(prefix="engine_envelopes_")
     _normalized_events_envelopes(spark, sf_dir).write.mode(
         "overwrite"
     ).json(stage)
-    _ENVELOPE_STAGE[key] = stage
     return stage
 
 

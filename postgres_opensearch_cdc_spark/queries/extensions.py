@@ -26,7 +26,7 @@ from postgres_opensearch_cdc_spark.functions.dedup import (
     word_shingles,
 )
 from postgres_opensearch_cdc_spark.functions.similarity import brute_force_topk
-from postgres_opensearch_cdc_spark.registry import load_table
+from postgres_opensearch_cdc_spark.registry import fingerprint, load_table, memo
 
 _LANG_ORDER = ["en", "de", "fr", "es", "zh"]
 
@@ -40,37 +40,26 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The exact all-pairs truth set is shared BY DESIGN between this entry
 # and dedup_lsh_recall_audit (training_pipeline12), which joins it
-# against the memoized LSH pairs — memoized + pinned per (app, sf_dir),
-# the _PAIR_CACHE treatment (r15; the audit previously re-ran the whole
-# shingle join per invocation).
-_TRUTH_CACHE: dict = {}
-
-
+# against the memoized LSH pairs — one pinned build per session memo.
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs by exact 3-gram Jaccard ≥ 0.4. All-pairs-via-
     shingle-join form (the small-SF oracle shape); the LSH-pruned form is
     dedup_minhash_lsh."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _TRUTH_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return memo(spark, sf_dir, "ngram_jaccard_pairs", _ngram_jaccard_pairs)
+
+
+def _ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    out = ngram_jaccard_pairs(docs, n=3, threshold=0.4).localCheckpoint(
+    return ngram_jaccard_pairs(docs, n=3, threshold=0.4).localCheckpoint(
         eager=True
     )
-    _TRUTH_CACHE[key] = out
-    return out
 
 
 # The verified near-dup pair set is the deterministic intermediate the
 # whole cluster-dedup family consumes (dedup_minhash_lsh reports it,
-# graph_dedup builds components from it) — memoize the localCheckpointed
-# pairs per (application, sf_dir), same materialized-view treatment as
-# graph_dedup's _CLUSTER_CACHE, so the downstream consumers pay a
-# metadata lookup instead of re-running the signature + verify joins.
-_PAIR_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# graph_dedup builds components from it) — memoized as a pinned frame,
+# so the downstream consumers pay a metadata lookup instead of
+# re-running the signature + verify joins.
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(32) + LSH(8 bands × 4 rows) candidates verified by exact
     Jaccard. Runs with the portable md5 family (one digest per shingle,
@@ -83,16 +72,16 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus); the only wide ops are the tiny band-bucket join and the
     exact-verify shingle join, and the latter explodes ONLY docs that
     appear in some candidate pair."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _PAIR_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return memo(spark, sf_dir, "minhash_lsh_pairs", _minhash_lsh_pairs)
+
+
+def _minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     arrays = shingle_arrays(docs, "text", "doc_id", n=3)
     sigs = minhash_signatures_from_arrays(arrays, num_hashes=32, hasher="md5")
     # candidates are reused twice (pair filter + doc prefilter): cache
     # the small pair set, not the corpus-sized shingle relation
-    # materialize=True: this builder runs ONCE per (app, sf_dir) — the
+    # materialize=True: this builder runs ONCE per memo — the
     # memo amortizes the banded relation's eager checkpoint across the
     # whole dedup family; single-shot callers (dedup_lsh_capped) keep
     # the lazy shape (r14 verdict #1)
@@ -106,11 +95,9 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     docs_cand = docs.join(F.broadcast(cand_ids), "doc_id", "left_semi")
     sh_cand = word_shingles(docs_cand, "text", "doc_id", n=3)
-    out = ngram_jaccard_pairs(
+    return ngram_jaccard_pairs(
         docs, n=3, threshold=0.4, candidates=cands, shingles=sh_cand
     ).localCheckpoint(eager=True)
-    _PAIR_CACHE[key] = out
-    return out
 
 
 def dedup_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -281,6 +268,21 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_adc_topk(vecs.filter(F.col("vec_id") != 0), q, codebook, k=10)
 
 
+def _index_dir(sf_dir: str, prefix: str) -> str:
+    """Where the persisted ``prefix`` index over this sf_dir's
+    embeddings lives: keyed on the table's fingerprint, so regenerated
+    data builds a fresh index instead of serving the old one."""
+    import hashlib
+    import os
+    import tempfile
+
+    emb = fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
+    key = hashlib.md5(
+        f"{os.path.abspath(sf_dir)}:{emb}:{prefix}".encode()
+    ).hexdigest()[:12]
+    return os.path.join(tempfile.gettempdir(), f"{prefix}_{key}")
+
+
 def ann_ivf_append_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL IVF maintenance, value-checked: the index is built
     on half the corpus (odd vec_ids) and the other half is APPENDED
@@ -289,9 +291,8 @@ def ann_ivf_append_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the SAME SQL as ann_ivf_topk over the full corpus, so a value
     match proves build+append ≡ one full build — the property that
     lets a CDC-fed corpus keep its ANN index current at delta cost.
-    Cached per (sf_dir, mtime) with atomic-rename publication, same
+    Cached per (sf_dir, fingerprint) with atomic-rename publication, same
     as the single-build index."""
-    import hashlib
     import os
     import shutil
     import tempfile
@@ -304,11 +305,7 @@ def ann_ivf_append_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     vecs = load_table(spark, sf_dir, "embeddings")
     q = [float(x) for x in vecs.filter(F.col("vec_id") == 0).head()["embedding"]]
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{os.path.getmtime(emb_path)}:inc".encode()
-    ).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"ivf_index_{key}")
+    path = _index_dir(sf_dir, "ivf_index_inc")
     if not os.path.exists(os.path.join(path, "_ivf_centroids.json")):
         seed_rows = (
             vecs.filter(F.col("vec_id").isin(_IVF_SEED_IDS))
@@ -336,14 +333,13 @@ def ann_ivf_append_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_pq_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PERSISTED PQ-codes index: the same frozen codebook as
     ann_pq_adc_topk, but the M-byte codes are materialized at ingest
-    (similarity.pq_index_build — cached per (sf_dir, table mtime),
+    (similarity.pq_index_build — cached per (sf_dir, table fingerprint),
     atomic-rename publication like the IVF index) and the query is a
     pure ADC lookup over the codes table: no per-query encode, full
     vectors never read. Identical summation order and rounding, so the
     SAME oracle proves index path ≡ inline encode path — and the
     latency delta between this entry and ann_pq_adc_topk IS the
     measured value of encoding at ingest."""
-    import hashlib
     import os
     import shutil
     import tempfile
@@ -355,11 +351,7 @@ def ann_pq_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     vecs = load_table(spark, sf_dir, "embeddings")
     q, codebook = _pq_frozen_codebook(vecs)
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{os.path.getmtime(emb_path)}".encode()
-    ).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"pq_index_{key}")
+    path = _index_dir(sf_dir, "pq_index")
     if not os.path.exists(os.path.join(path, "_pq_codebook.json")):
         stage = tempfile.mkdtemp(prefix="pq_index_build_")
         pq_index_build(vecs.filter(F.col("vec_id") != 0), stage, codebook)
@@ -382,9 +374,8 @@ def ann_ivfpq_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_id 1..10 (same as ann_ivf_*), codebook = vec_id 1..16 subvectors
     (same as ann_pq_*), so the oracle is the ann_ivf assignment CTEs
     composed with the ann_pq encode/ADC CTEs — a value match proves
-    the composition, not two tested halves. Cached per (sf_dir, mtime)
+    the composition, not two tested halves. Cached per (sf_dir, fingerprint)
     with atomic-rename publication like the other persisted indexes."""
-    import hashlib
     import os
     import shutil
     import tempfile
@@ -396,11 +387,7 @@ def ann_ivfpq_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     vecs = load_table(spark, sf_dir, "embeddings")
     q, codebook = _pq_frozen_codebook(vecs)
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{os.path.getmtime(emb_path)}:ivfpq".encode()
-    ).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"ivfpq_index_{key}")
+    path = _index_dir(sf_dir, "ivfpq_index")
     if not os.path.exists(os.path.join(path, "_ivf_centroids.json")):
         seed_rows = (
             vecs.filter(F.col("vec_id").isin(_IVF_SEED_IDS))
@@ -431,9 +418,8 @@ def ann_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     residual subtraction (list_transform over the assigned cell's
     centroid), per-subspace argmin encode, per-cell query tables, and
     the m-ascending ADC fold — so the recall-improving variant is
-    hash-checked, not just unit-tested. Cached per (sf_dir, mtime)
+    hash-checked, not just unit-tested. Cached per (sf_dir, fingerprint)
     like the other persisted indexes."""
-    import hashlib
     import os
     import shutil
     import tempfile
@@ -454,12 +440,7 @@ def ann_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         [float(x) for x in r["embedding"]]
         for r in sorted(seed_rows, key=lambda r: r["vec_id"])
     ]
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{os.path.getmtime(emb_path)}:ivfpqres"
-        .encode()
-    ).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"ivfpqres_index_{key}")
+    path = _index_dir(sf_dir, "ivfpqres_index")
     if not os.path.exists(os.path.join(path, "_ivf_centroids.json")):
         stage = tempfile.mkdtemp(prefix="ivfpqres_index_build_")
         ivfpq_index_build(
@@ -602,12 +583,11 @@ def ann_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plans.py). Identical frozen-seed quantizer (vec_id
     1..10) and identical results to the inline probe, so one oracle
     proves index path ≡ inline path. BUILD-ONCE / QUERY-MANY for real:
-    the index is cached per (sf_dir, table mtime) — the frozen seeds
-    make its content deterministic, the mtime key invalidates on data
+    the index is cached per (sf_dir, table fingerprint) — the frozen seeds
+    make its content deterministic, the fingerprint key invalidates on data
     regeneration, and publication is an atomic whole-directory rename
     (a concurrent builder loses the rename and reuses the winner's
     index) — so repeated queries pay only the pruned probe."""
-    import hashlib
     import os
     import shutil
     import tempfile
@@ -619,11 +599,7 @@ def ann_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     vecs = load_table(spark, sf_dir, "embeddings")
     q = [float(x) for x in vecs.filter(F.col("vec_id") == 0).head()["embedding"]]
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{os.path.getmtime(emb_path)}".encode()
-    ).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"ivf_index_{key}")
+    path = _index_dir(sf_dir, "ivf_index")
     if not os.path.exists(os.path.join(path, "_ivf_centroids.json")):
         seed_rows = (
             vecs.filter(F.col("vec_id").isin(_IVF_SEED_IDS))
@@ -1835,27 +1811,22 @@ SPAN_WINDOW = 10  # tokens per window — the "dedup at the N-token level" N
 
 
 # The maximal-span frame is shared BY DESIGN between the span report
-# and the per-doc stats (the stats are "over the maximal spans") —
-# memoized + pinned per (app, sf_dir), the _PAIR_CACHE treatment
-# (r15): each entry re-ran the corpus window pipeline per invocation.
-_SPANS_CACHE: dict = {}
-
-
+# and the per-doc stats (the stats are "over the maximal spans") — one
+# pinned build per session memo instead of one corpus window pipeline
+# per entry.
 def _corpus_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return memo(spark, sf_dir, "corpus_spans", _build_corpus_spans)
+
+
+def _build_corpus_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from postgres_opensearch_cdc_spark.functions.dedup import (
         duplicate_window_spans,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SPANS_CACHE.get(key)
-    if hit is not None:
-        return hit
     docs = load_table(spark, sf_dir, "documents")
-    out = duplicate_window_spans(
+    return duplicate_window_spans(
         docs, "text", "doc_id", window=SPAN_WINDOW
     ).localCheckpoint(eager=True)
-    _SPANS_CACHE[key] = out
-    return out
 
 
 def dedup_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -32,16 +32,7 @@ from postgres_opensearch_cdc_spark.queries.extensions import (
     MINHASH_PAIRS_CTES,
     dedup_minhash_lsh,
 )
-from postgres_opensearch_cdc_spark.registry import load_table
-
-
-# The cluster labeling is a deterministic intermediate both entries (and
-# any downstream dedup consumer) share — memoize the localCheckpointed
-# result per (session, sf_dir), the moral equivalent of a materialized
-# view over the pair graph. localCheckpoint keeps it materialized on the
-# executors, so the second consumer pays a metadata lookup, not a
-# recomputation of the shingle self-join.
-_CLUSTER_CACHE: dict[tuple[str, str], DataFrame] = {}
+from postgres_opensearch_cdc_spark.registry import load_table, memo
 
 
 def _label_clusters(spark: SparkSession, sf_dir: str,
@@ -68,21 +59,20 @@ def _label_clusters(spark: SparkSession, sf_dir: str,
     )
 
 
+# The cluster labeling is a deterministic intermediate both entries (and
+# any downstream dedup consumer) share — a session memo of the
+# localCheckpointed result, the moral equivalent of a materialized view
+# over the pair graph: the second consumer pays a metadata lookup, not
+# a recomputation of the shingle self-join.
 def _doc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, cluster_id) for every document; singletons label
     themselves. Pairs = LSH-pruned MinHash candidates exact-verified at
     Jaccard >= 0.4 (the same pair set dedup_minhash_lsh
     value-checks)."""
-    # applicationId, not id(spark): id() can be recycled after a session
-    # is garbage-collected, which would serve a dead session's
-    # localCheckpoint to an unrelated new session.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _CLUSTER_CACHE.get(key)
-    if cached is not None:
-        return cached
-    out = _label_clusters(spark, sf_dir).localCheckpoint(eager=True)
-    _CLUSTER_CACHE[key] = out
-    return out
+    return memo(
+        spark, sf_dir, "doc_clusters",
+        lambda s, d: _label_clusters(s, d).localCheckpoint(eager=True),
+    )
 
 
 def dedup_cc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

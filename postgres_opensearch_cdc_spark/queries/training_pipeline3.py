@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from postgres_opensearch_cdc_spark.functions import text as textfn
 from postgres_opensearch_cdc_spark.functions.dedup import hash60
-from postgres_opensearch_cdc_spark.registry import load_table
+from postgres_opensearch_cdc_spark.registry import load_table, memo
 
 SPLIT_SALT = 7
 SPLIT_DENOM = 100
@@ -321,20 +321,17 @@ from postgres_opensearch_cdc_spark.functions.bpe import (  # noqa: E402
 )
 
 BPE_MERGES = 8
-# the learned merge list is a session-level memo (the apply entry
-# consumes the train entry's artifact by design — same materialized-
-# view treatment as the dedup pair cache)
-_BPE_CACHE: dict[tuple, list] = {}
 
 
+# the learned merge list is a session memo: the apply entry consumes
+# the train entry's artifact by design
 def _bpe_merges(spark: SparkSession, sf_dir: str) -> list:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BPE_CACHE:
-        _BPE_CACHE[key] = bpe_train(
-            load_table(spark, sf_dir, "documents"), "text",
-            num_merges=BPE_MERGES,
-        )
-    return _BPE_CACHE[key]
+    return memo(
+        spark, sf_dir, "bpe_merges",
+        lambda s, d: bpe_train(
+            load_table(s, d, "documents"), "text", num_merges=BPE_MERGES
+        ),
+    )
 
 
 def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -368,17 +365,13 @@ QUERIES["bpe_train_merges"] = bpe_train_merges
 QUERIES["bpe_apply_tokens"] = bpe_apply_tokens
 
 
-_BPE_LOCAL_CACHE: dict[tuple, list] = {}
-
-
 def _bpe_merges_local(spark: SparkSession, sf_dir: str) -> list:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BPE_LOCAL_CACHE:
-        _BPE_LOCAL_CACHE[key] = bpe_train_local(
-            load_table(spark, sf_dir, "documents"), "text",
-            num_merges=BPE_MERGES,
-        )
-    return _BPE_LOCAL_CACHE[key]
+    return memo(
+        spark, sf_dir, "bpe_merges_local",
+        lambda s, d: bpe_train_local(
+            load_table(s, d, "documents"), "text", num_merges=BPE_MERGES
+        ),
+    )
 
 
 def bpe_train_merges_local(spark: SparkSession, sf_dir: str) -> DataFrame:

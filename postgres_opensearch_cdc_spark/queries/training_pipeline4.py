@@ -47,7 +47,7 @@ from postgres_opensearch_cdc_spark.functions.similarity import (
     l2_norm,
     sq_l2,
 )
-from postgres_opensearch_cdc_spark.registry import load_table
+from postgres_opensearch_cdc_spark.registry import load_table, memo
 
 # --- semantic dedup (SemDeDup: k-means then within-cluster prune) ----
 SEM_K = 8          # clusters (production: ~sqrt(corpus) to 100k)
@@ -123,9 +123,6 @@ ENTROPY_ALPHABET = "abcdefghijklmnopqrstuvwxyz "
 # k-means fit: distributed Lloyd with bounded driver exchange
 # ---------------------------------------------------------------------------
 
-_SEM_CACHE: dict[tuple, list] = {}
-
-
 # shared with the streaming sink (streaming/semantic.py): the portable
 # literal-centroid assignment lives in functions/similarity.py
 _sq_l2 = sq_l2
@@ -142,9 +139,10 @@ def _sem_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     kmeans_train, but with every fate hash60-portable so the oracle
     can unroll it. Centroids round to 6 dp per iteration in both
     engines, pinning downstream floats to identical literals."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _SEM_CACHE:
-        return _SEM_CACHE[key]
+    return memo(spark, sf_dir, "sem_centroids", _fit_sem_centroids)
+
+
+def _fit_sem_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     vecs = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _as_double(F.col("embedding")).alias("v")
     )
@@ -174,7 +172,6 @@ def _sem_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
         new = {int(r.cluster): [round(float(x), 6) for x in r.c] for r in rows}
         # empty-cell guard: keep the previous centroid (standard Lloyd)
         cents = [new.get(k, cents[k]) for k in range(SEM_K)]
-    _SEM_CACHE[key] = cents
     return cents
 
 

@@ -54,7 +54,7 @@ from postgres_opensearch_cdc_spark.functions.bpe import (
 )
 from postgres_opensearch_cdc_spark.functions.dedup import hash60
 from postgres_opensearch_cdc_spark.functions.ranking import with_global_rank
-from postgres_opensearch_cdc_spark.registry import load_table
+from postgres_opensearch_cdc_spark.registry import load_table, memo
 
 WP_MERGES = 8       # WordPiece merges learned (production: 30k; the
                     # bpe_train_local driver-loop pattern applies)
@@ -73,17 +73,13 @@ _TOKS_SQL = r"regexp_split_to_array(lower(text), '\s+')"
 # WordPiece-objective merge training
 # ---------------------------------------------------------------------------
 
-_WP_CACHE: dict[tuple, list] = {}
-
-
 def _wp_merges(spark: SparkSession, sf_dir: str) -> list:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _WP_CACHE:
-        _WP_CACHE[key] = wordpiece_train(
-            load_table(spark, sf_dir, "documents"), "text",
-            num_merges=WP_MERGES,
-        )
-    return _WP_CACHE[key]
+    return memo(
+        spark, sf_dir, "wp_merges",
+        lambda s, d: wordpiece_train(
+            load_table(s, d, "documents"), "text", num_merges=WP_MERGES
+        ),
+    )
 
 
 def wordpiece_apply_longest(spark: SparkSession, sf_dir: str) -> DataFrame:

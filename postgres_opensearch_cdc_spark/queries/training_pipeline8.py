@@ -31,7 +31,7 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from postgres_opensearch_cdc_spark.registry import load_table
+from postgres_opensearch_cdc_spark.registry import load_table, memo
 
 _TOKS_SQL = r"regexp_split_to_array(lower(text), '\s+')"
 
@@ -129,31 +129,21 @@ PF_N = 3       # shingle width (tokens) — same substrate as
 # The (pos, arrs) prefix-index substrate is shared BY DESIGN between
 # the symmetric prefix-filter join (here) and the asymmetric
 # containment join (training_pipeline10) — same documents, same
-# shingle width, same global rank. Memoize the localCheckpointed pair
-# per (application, sf_dir, n) — the _PAIR_CACHE / memo_build_sec
-# treatment (r14 verdict #9): each entry previously rebuilt ~3 s of
-# identical substrate per invocation, and within one entry `pos`
-# feeds two consumers (prefix derivation + verify arrays) that
-# re-ran the rank join without the pin.
-_PREFIX_MEMO: dict = {}
-
-
+# shingle width, same global rank — a session memo per n. The pin also
+# matters within one entry: `pos` feeds two consumers (prefix
+# derivation + verify arrays) that would each re-run the rank join.
 def prefix_substrate(spark: SparkSession, sf_dir: str, n: int):
     """Memoized prefix-index substrate: (pos, arrs), both eagerly
     localCheckpointed so every consumer — in this entry and in the
     containment join — pays a metadata read, not a rebuild."""
+    return memo(spark, sf_dir, "prefix_substrate", _build_prefix_substrate, n)
+
+
+def _build_prefix_substrate(spark: SparkSession, sf_dir: str, n: int):
     from postgres_opensearch_cdc_spark.functions.dedup import prefix_index
 
-    key = (spark.sparkContext.applicationId, sf_dir, n)
-    hit = _PREFIX_MEMO.get(key)
-    if hit is not None:
-        return hit
-    docs = load_table(spark, sf_dir, "documents")
-    pos, arrs = prefix_index(docs, n=n)
-    pos = pos.localCheckpoint(eager=True)
-    arrs = arrs.localCheckpoint(eager=True)
-    _PREFIX_MEMO[key] = (pos, arrs)
-    return pos, arrs
+    pos, arrs = prefix_index(load_table(spark, sf_dir, "documents"), n=n)
+    return pos.localCheckpoint(eager=True), arrs.localCheckpoint(eager=True)
 
 
 def dedup_prefix_filter_join(

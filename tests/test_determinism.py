@@ -34,13 +34,12 @@ def _rows(df):
 
 
 def _clear_memoization():
-    """The dedup pair/cluster caches memoize per (application, sf_dir)
-    — clear them so the second run genuinely re-executes under the new
-    partition count instead of returning the cached frame."""
-    from postgres_opensearch_cdc_spark.queries import extensions, graph_dedup
+    """The session memo holds the dedup pair/cluster frames — clear it
+    so the second run genuinely re-executes under the new partition
+    count instead of returning the memoized frame."""
+    from postgres_opensearch_cdc_spark import registry
 
-    extensions._PAIR_CACHE.clear()
-    graph_dedup._CLUSTER_CACHE.clear()
+    registry._MEMO.clear()
 
 
 @pytest.mark.parametrize("name", ENTRIES)

@@ -1355,6 +1355,32 @@ def test_terms_enum_and_analyze(spark, tmp_path):
     ]
 
 
+def test_monitor_on_uncommitted_table_reports_no_hits(spark, tmp_path):
+    """A monitor on a registered table with no commit yet evaluates to
+    0 hits and an empty log (an index with no documents), typed as the
+    log of the table's first commit; time travel to a missing version
+    still raises."""
+    engine = CdcEngine(spark=spark, workdir=str(tmp_path))
+    engine.register_table("card", CARD_SCHEMA)
+    engine.put_monitor("any_card", "card", {"query": {"match_all": {}}},
+                       "id > 0")
+    assert engine.evaluate_monitors(batch_id=1) == {"any_card": 0}
+    empty = engine.alerts("any_card")
+    assert empty.count() == 0
+    before = engine.view("card").schema
+    with pytest.raises(FileNotFoundError, match="no committed snapshot"):
+        engine.view("card", version=1).collect()
+
+    engine.backfill("card", spark.createDataFrame(
+        [(1, "ACTIVE", "DEBIT")], CARD_SCHEMA))
+    assert engine.view("card").schema == before
+    assert engine.evaluate_monitors(batch_id=2) == {"any_card": 1}
+    log = engine.alerts("any_card")
+    assert log.dtypes == empty.dtypes
+    assert [(r["monitor"], r["batch_id"], r["id"]) for r in log.collect()] == [
+        ("any_card", 2, 1)]
+
+
 def test_monitor_on_alias_evaluates_when_member_streams(spark, tmp_path):
     """A monitor may target an ALIAS (the multi-index monitor shape);
     it evaluates whenever any member table's stream commits a batch."""

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -113,14 +115,17 @@ def test_survivors_bounded_by_docs(spark, sf_dir):
 
 
 def test_cluster_cache_keyed_on_application_id(spark, sf_dir):
+    from postgres_opensearch_cdc_spark import registry
     from postgres_opensearch_cdc_spark.queries import graph_dedup
 
-    graph_dedup._CLUSTER_CACHE.clear()
+    registry._MEMO.clear()
     first = graph_dedup._doc_clusters(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    assert key in graph_dedup._CLUSTER_CACHE
-    # second call is a cache hit: same DataFrame object, no recompute
+    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir),
+           "doc_clusters", ())
+    assert key in registry._MEMO
+    # second call is a memo hit: same DataFrame object, no recompute
     assert graph_dedup._doc_clusters(spark, sf_dir) is first
     # a different sf_dir misses (never serves another dataset's clusters)
-    other = (spark.sparkContext.applicationId, sf_dir + "/other")
-    assert other not in graph_dedup._CLUSTER_CACHE
+    other = registry.memo(spark, sf_dir + "/other", "doc_clusters",
+                          lambda s, d: "rebuilt")
+    assert other == "rebuilt"
