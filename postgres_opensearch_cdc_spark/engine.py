@@ -36,7 +36,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from postgres_opensearch_cdc_spark.cdc.envelope import envelope_schema
+from postgres_opensearch_cdc_spark.commits import write_json_atomic
 from postgres_opensearch_cdc_spark.parquet_dirs import read_parquet_dirs
 from postgres_opensearch_cdc_spark.sources.changelog import file_changelog_stream
 from postgres_opensearch_cdc_spark.streaming.apply import (
@@ -98,17 +98,11 @@ class CdcEngine:
         return os.path.join(self.workdir, "_catalog.json")
 
     def _save_catalog(self) -> None:
-        import json
-
-        os.makedirs(self.workdir, exist_ok=True)
-        tmp = self._catalog_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({
-                "aliases": self.aliases,
-                "monitors": self.monitors,
-                "templates": self.templates,
-            }, fh)
-        os.replace(tmp, self._catalog_path)
+        write_json_atomic(self._catalog_path, {
+            "aliases": self.aliases,
+            "monitors": self.monitors,
+            "templates": self.templates,
+        })
 
     def _load_catalog(self) -> None:
         import json
@@ -491,22 +485,16 @@ class CdcEngine:
 
     def _write_rollup_meta(self, rollup_name: str, sink: RollupSink,
                            table: str, group_expr: str | None) -> None:
-        import json
-
-        os.makedirs(sink.path, exist_ok=True)
-        tmp = os.path.join(sink.path, "_rollup_meta.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump({
-                "group_col": sink.group_col,
-                "sum_cols": list(sink.sum_cols),
-                "count_cols": list(sink.count_cols),
-                "avg_cols": list(sink.avg_cols),
-                "minmax_cols": list(sink.minmax_cols),
-                "table": table,
-                "group_expr": group_expr,
-                "aux_num_buckets": sink.aux_num_buckets,
-            }, fh)
-        os.replace(tmp, os.path.join(sink.path, "_rollup_meta.json"))
+        write_json_atomic(os.path.join(sink.path, "_rollup_meta.json"), {
+            "group_col": sink.group_col,
+            "sum_cols": list(sink.sum_cols),
+            "count_cols": list(sink.count_cols),
+            "avg_cols": list(sink.avg_cols),
+            "minmax_cols": list(sink.minmax_cols),
+            "table": table,
+            "group_expr": group_expr,
+            "aux_num_buckets": sink.aux_num_buckets,
+        })
 
     def _resolve_rollup(self, rollup_name: str) -> "RollupSink | None":
         """In-memory registration, else rehydrate from the persisted
@@ -790,8 +778,6 @@ class CdcEngine:
         what IS returned. Rebuild cost is one scan + one clustered
         write (ivfpq_index_build); production refreshes on a timer or
         version delta, exactly like index refresh intervals."""
-        import json
-
         from postgres_opensearch_cdc_spark.functions.similarity import (
             ivfpq_index_build,
             kmeans_train,
@@ -835,8 +821,7 @@ class CdcEngine:
             "built_hwm": hwm if hwm is not None else -1,
             "vec_field": vec_field,
         }
-        with open(os.path.join(path, "_knn_meta.json"), "w") as fh:
-            json.dump(meta, fh)
+        write_json_atomic(os.path.join(path, "_knn_meta.json"), meta)
         self.knn_indexes[(name, vec_field)] = meta
         return meta
 
@@ -1389,14 +1374,14 @@ class CdcEngine:
             # own commits dir, so mname needn't be part of the key)
             tag = (hashlib.sha256(writer_id.encode()).hexdigest()[:12]
                    if writer_id is not None else "adhoc")
-            manifest_name = f"w{tag}-b{batch_id}.json"
-            manifest_path = os.path.join(commits_dir, manifest_name)
+            manifest_path = os.path.join(commits_dir, f"w{tag}-b{batch_id}.json")
             if os.path.exists(manifest_path):  # replayed batch
                 with open(manifest_path) as fh:
                     return json.load(fh)["count"]
         else:
-            manifest_name = f"ondemand-{uuid.uuid4().hex[:12]}.json"
-            manifest_path = os.path.join(commits_dir, manifest_name)
+            manifest_path = os.path.join(
+                commits_dir, f"ondemand-{uuid.uuid4().hex[:12]}.json"
+            )
         result = self.search(spec["table"], spec["body"])
         hits = result.filter(F.expr(spec["condition"]))
         out = self._alert_row(mname, hits, batch_id)
@@ -1422,37 +1407,41 @@ class CdcEngine:
             if n:
                 out.write.mode("overwrite").parquet(data_dir)
         self._monitor_fired[mname] = bool(n)
-        if not n:
-            commit = None
-        os.makedirs(commits_dir, exist_ok=True)
-        tmp = os.path.join(commits_dir, f".tmp-{manifest_name}")
-        with open(tmp, "w") as fh:
-            json.dump({"count": n, "commit": commit,
-                       "batch_id": batch_id, "writer_id": writer_id}, fh)
-        os.replace(tmp, manifest_path)  # the commit point
+        write_json_atomic(manifest_path, {  # the commit point
+            "count": n, "commit": commit if n else None,
+            "batch_id": batch_id, "writer_id": writer_id,
+        })
         return n
+
+    def _alert_manifests(self, monitor_name: str) -> list[dict]:
+        """The committed evaluation manifests of a monitor's alert log,
+        in name order (a crashed evaluation's temp file is skipped)."""
+        import json
+
+        commits_dir = os.path.join(
+            self.workdir, f"alerts_{monitor_name}", "_commits"
+        )
+        if not os.path.isdir(commits_dir):
+            return []
+        out = []
+        for name in sorted(os.listdir(commits_dir)):
+            if name.startswith(".") or not name.endswith(".json"):
+                continue
+            with open(os.path.join(commits_dir, name)) as fh:
+                out.append(json.load(fh))
+        return out
 
     def alerts(self, monitor_name: str) -> DataFrame:
         """The alert log of a monitor: the union of its COMMITTED
         evaluation entries (uncommitted data dirs from a crashed
         evaluation are invisible). Empty frame if it never fired."""
-        import json
-
         if monitor_name not in self.monitors:
             raise KeyError(f"unknown monitor {monitor_name!r}")
-        base = os.path.join(self.workdir, f"alerts_{monitor_name}")
-        commits_dir = os.path.join(base, "_commits")
-        dirs = []
-        if os.path.isdir(commits_dir):
-            for name in sorted(os.listdir(commits_dir)):
-                if name.startswith(".") or not name.endswith(".json"):
-                    continue
-                with open(os.path.join(commits_dir, name)) as fh:
-                    manifest = json.load(fh)
-                if manifest["commit"]:
-                    dirs.append(
-                        os.path.join(base, "data", manifest["commit"])
-                    )
+        data = os.path.join(self.workdir, f"alerts_{monitor_name}", "data")
+        dirs = [
+            os.path.join(data, m["commit"])
+            for m in self._alert_manifests(monitor_name) if m["commit"]
+        ]
         # the log's schema is the monitor's result row shape: building
         # it plans the search but runs no job, so neither does the read
         spec = self.monitors[monitor_name]
@@ -1560,10 +1549,7 @@ class CdcEngine:
             "seq_col": self.seq_col,
             "registered_schema": json.loads(handle.schema.json()),
         }
-        tmp = os.path.join(dest, ".tmp-snapshot.json")
-        with open(tmp, "w") as fh:
-            json.dump(info, fh)
-        os.replace(tmp, os.path.join(dest, "snapshot.json"))
+        write_json_atomic(os.path.join(dest, "snapshot.json"), info)
         return info
 
     def restore(self, path: str, as_name: str) -> TableHandle:
@@ -1621,22 +1607,10 @@ class CdcEngine:
         this is a metadata read — no data files are opened; an
         uncommitted crashed evaluation is invisible, exactly like
         ``alerts()``)."""
-        import json
-
-        out = {}
-        for mname in sorted(self.monitors):
-            commits_dir = os.path.join(
-                self.workdir, f"alerts_{mname}", "_commits"
-            )
-            n = 0
-            if os.path.isdir(commits_dir):
-                for name in os.listdir(commits_dir):
-                    if name.startswith(".") or not name.endswith(".json"):
-                        continue
-                    with open(os.path.join(commits_dir, name)) as fh:
-                        n += json.load(fh)["count"]
-            out[mname] = n
-        return out
+        return {
+            mname: sum(m["count"] for m in self._alert_manifests(mname))
+            for mname in sorted(self.monitors)
+        }
 
     def cat_indices(self) -> list[dict]:
         """The ``_cat/indices`` analog: one row per mirror with live

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
+from postgres_opensearch_cdc_spark.commits import write_json_atomic
 from postgres_opensearch_cdc_spark.parquet_dirs import read_parquet_dirs
 
 
@@ -562,7 +563,6 @@ def ivf_index_build(
     read of nprobe/k of the corpus — the build-once / query-many
     shape vector serving needs. Returns the centroids (trained here
     when not supplied)."""
-    import json
     import os
 
     if centroids is None:
@@ -583,10 +583,7 @@ def ivf_index_build(
             F.pmod(F.xxhash64(F.col(id_col)), F.lit(files_per_cell)),
         )
     clustered.write.mode("overwrite").partitionBy("_cell").parquet(path)
-    tmp = os.path.join(path, "_ivf_centroids.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(centroids, fh)
-    os.replace(tmp, os.path.join(path, "_ivf_centroids.json"))
+    write_json_atomic(os.path.join(path, "_ivf_centroids.json"), centroids)
     return centroids
 
 
@@ -797,7 +794,6 @@ def pq_index_build(
     code columns and never touches a full vector. The codebook JSON
     write is the commit point (temp + atomic rename), so a crashed
     build is invisible to readers."""
-    import json
     import os
 
     coded = _ensure_build_parallelism(vectors).selectExpr(
@@ -807,10 +803,7 @@ def pq_index_build(
           enumerate(pq_code_sqls(f"`{vec_col}`", codebook))],
     )
     coded.write.mode("overwrite").parquet(path)
-    tmp = os.path.join(path, "_pq_codebook.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(codebook, fh)
-    os.replace(tmp, os.path.join(path, "_pq_codebook.json"))
+    write_json_atomic(os.path.join(path, "_pq_codebook.json"), codebook)
 
 
 def pq_index_append(
@@ -963,7 +956,6 @@ def ivfpq_index_build(
     tests/test_similarity.py pins the recall win on clustered data).
     The default stays by_residual=false so the oracle-checked entry's
     encode is engine-portable (one global LUT replays in DuckDB)."""
-    import json
     import os
 
     coded = _encoded_for_index(
@@ -977,25 +969,16 @@ def ivfpq_index_build(
             F.pmod(F.xxhash64(F.col(id_col)), F.lit(files_per_cell)),
         )
     clustered.write.mode("overwrite").partitionBy("_cell").parquet(path)
-    tmp = os.path.join(path, "_pq_codebook.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(codebook, fh)
-    os.replace(tmp, os.path.join(path, "_pq_codebook.json"))
-    tmp = os.path.join(path, "_ivfpq_meta.json.tmp")
-    with open(tmp, "w") as fh:
-        # id_type lets the empty-probe query path construct its empty
-        # result from a literal schema instead of listing the index;
-        # the codes schema lets a probe read skip footer inference
-        json.dump({
-            "by_residual": bool(by_residual),
-            "id_type": vectors.schema[id_col].dataType.simpleString(),
-            "schema": coded.drop("_cell").schema.jsonValue(),
-        }, fh)
-    os.replace(tmp, os.path.join(path, "_ivfpq_meta.json"))
-    tmp = os.path.join(path, "_ivf_centroids.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(centroids, fh)
-    os.replace(tmp, os.path.join(path, "_ivf_centroids.json"))
+    write_json_atomic(os.path.join(path, "_pq_codebook.json"), codebook)
+    # id_type lets the empty-probe query path construct its empty
+    # result from a literal schema instead of listing the index; the
+    # codes schema lets a probe read skip footer inference
+    write_json_atomic(os.path.join(path, "_ivfpq_meta.json"), {
+        "by_residual": bool(by_residual),
+        "id_type": vectors.schema[id_col].dataType.simpleString(),
+        "schema": coded.drop("_cell").schema.jsonValue(),
+    })
+    write_json_atomic(os.path.join(path, "_ivf_centroids.json"), centroids)
 
 
 def ivfpq_index_append(

@@ -86,7 +86,7 @@ class IndexLifecycleManager:
     min_index_age. ``now`` is always a parameter (never a clock read)
     so transitions are reproducible and testable. State lives in
     ``<path>/_ilm_state.json`` — a single small JSON object, rewritten
-    atomically (write-temp + os.replace), the same one-object-PUT
+    atomically (commits.write_json_atomic), the same one-object-PUT
     commit model as VersionedMirrorSink.
 
     At 100 TB: rollover bounds the size of the write-hot generation (so
@@ -114,14 +114,9 @@ class IndexLifecycleManager:
             return json.load(fh)
 
     def _save(self, state: dict) -> None:
-        import json
-        import os
+        from postgres_opensearch_cdc_spark.commits import write_json_atomic
 
-        os.makedirs(self.path, exist_ok=True)
-        tmp = self._state_file + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(state, fh)
-        os.replace(tmp, self._state_file)
+        write_json_atomic(self._state_file, state)
 
     def gen_dir(self, gen: int) -> str:
         import os

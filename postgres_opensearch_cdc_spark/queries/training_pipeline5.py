@@ -48,10 +48,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from postgres_opensearch_cdc_spark.functions.bpe import (
-    merges_frame,
-    wordpiece_train,
-)
+from postgres_opensearch_cdc_spark.functions.bpe import wordpiece_train
 from postgres_opensearch_cdc_spark.functions.dedup import hash60
 from postgres_opensearch_cdc_spark.functions.ranking import with_global_rank
 from postgres_opensearch_cdc_spark.registry import load_table, memo

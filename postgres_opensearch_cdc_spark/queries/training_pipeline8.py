@@ -27,9 +27,7 @@ Jaccard/coefficient division, identical in both engines.
 
 from __future__ import annotations
 
-import math
-
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from postgres_opensearch_cdc_spark.registry import load_table, memo
 

@@ -28,6 +28,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 
 from postgres_opensearch_cdc_spark.cdc.envelope import OP_DELETE
+from postgres_opensearch_cdc_spark.commits import CommitLog
 from postgres_opensearch_cdc_spark.parquet_dirs import read_parquet_dirs
 
 
@@ -130,10 +131,10 @@ class VersionedMirrorSink:
         Readers resolve max(version) manifest → the mapped bucket dirs;
         they never list the data dir or a superseded commit.
       * The single manifest file write IS the commit point (a one-object
-        PUT — atomic on S3/GCS; modeled locally by write-temp +
-        os.replace). A crash anywhere before it leaves orphan data files
-        that no reader ever sees; the mirror stays readable at the
-        previous version throughout. No rmtree is needed for emptied
+        PUT — atomic on S3/GCS; modeled locally by write-temp + rename,
+        see commits.py). A crash anywhere before it leaves orphan data
+        files that no reader ever sees; the mirror stays readable at
+        the previous version throughout. No rmtree is needed for emptied
         buckets — they are simply absent from the next manifest.
       * Batch replay after a checkpoint-recovery is detected via the
         manifest's batch_id (exactly-once commit, stronger than the
@@ -230,7 +231,7 @@ class VersionedMirrorSink:
         return (want, True) if want > recorded else (recorded, False)
 
     def _dir_bytes(self, commit_id: str, bucket) -> int:
-        d = os.path.join(self._data_dir, commit_id, f"_bucket={bucket}")
+        d = os.path.join(self.log.data_dir, commit_id, f"_bucket={bucket}")
         return sum(
             e.stat().st_size for e in os.scandir(d)
             if e.is_file() and not e.name.startswith(("_", "."))
@@ -247,57 +248,30 @@ class VersionedMirrorSink:
         }
 
     @property
-    def _data_dir(self) -> str:
-        return os.path.join(self.path, "data")
-
-    @property
-    def _commits_dir(self) -> str:
-        return os.path.join(self.path, "_commits")
-
-    def _manifests(self) -> list[str]:
-        if not os.path.isdir(self._commits_dir):
-            return []
-        return sorted(
-            f for f in os.listdir(self._commits_dir)
-            if f.startswith("v") and f.endswith(".json")
-        )
+    def log(self) -> CommitLog:
+        return CommitLog(self.path)
 
     def latest_manifest(self) -> dict | None:
-        return self.manifest()
+        return self.log.load()
 
     def manifest(self, version: "int | None" = None) -> dict | None:
-        """Load a committed manifest: the latest, or an explicit
-        ``version`` — every un-vacuumed commit is a readable snapshot
-        (time travel for free, see class docstring)."""
-        import json
-
-        names = self._manifests()
-        if not names:
-            return None
-        if version is None:
-            name = names[-1]
-        else:
-            name = f"v{version:08d}.json"
-            if name not in names:
-                raise FileNotFoundError(
-                    f"no committed version {version} under {self.path} "
-                    f"(available: {[int(n[1:-5]) for n in names]})"
-                )
-        with open(os.path.join(self._commits_dir, name)) as fh:
-            return json.load(fh)
+        """A committed manifest: the latest, or an explicit ``version``
+        (time travel for free until vacuum, see class docstring)."""
+        return self.log.load(version)
 
     def exists(self) -> bool:
-        return bool(self._manifests())
+        return self.log.exists()
 
     def _bucket_paths(self, manifest: dict, buckets: list | None = None):
         """Group the manifest's bucket→commit mapping into per-commit
         path lists (restricted to ``buckets`` when pruning)."""
+        data_dir = self.log.data_dir
         by_commit: dict[str, list[str]] = {}
         for b, cid in manifest["buckets"].items():
             if buckets is not None and int(b) not in buckets:
                 continue
             by_commit.setdefault(cid, []).append(
-                os.path.join(self._data_dir, cid, f"_bucket={b}")
+                os.path.join(data_dir, cid, f"_bucket={b}")
             )
         return by_commit
 
@@ -315,10 +289,11 @@ class VersionedMirrorSink:
         schema = T.StructType.fromJson(manifest["schema"]).add(
             "_bucket", T.IntegerType()
         )
+        data_dir = self.log.data_dir
         return reduce(DataFrame.union, [
             read_parquet_dirs(
                 spark, schema, paths,
-                base_path=os.path.join(self._data_dir, cid),
+                base_path=os.path.join(data_dir, cid),
             )
             for cid, paths in sorted(by_commit.items())
         ])
@@ -356,18 +331,9 @@ class VersionedMirrorSink:
         import uuid
 
         spark = batch.sparkSession
-        manifest = self.latest_manifest()
-        if (
-            manifest is not None
-            and batch_id >= 0
-            and manifest.get("batch_id") == batch_id
-            # batch ids are only meaningful PER STREAMING QUERY: a new
-            # checkpoint (different changelog dir, re-route) restarts at
-            # batch 0, which must not alias the old stream's batch 0 —
-            # the (writer, batch) pair is Spark's documented foreachBatch
-            # dedup key
-            and manifest.get("writer_id") == writer_id
-        ):
+        log = self.log
+        manifest = log.load()
+        if log.replays(manifest, batch_id, writer_id):
             return  # replayed batch already committed — exactly-once
         version = (manifest["version"] + 1) if manifest else 1
         sizes = self.bucket_bytes(manifest) if manifest else {}
@@ -446,7 +412,7 @@ class VersionedMirrorSink:
             .drop("_rn", "_pri")
         )
         commit_id = f"commit-{version:08d}-{uuid.uuid4().hex[:8]}"
-        commit_dir = os.path.join(self._data_dir, commit_id)
+        commit_dir = os.path.join(log.data_dir, commit_id)
         merged.write.partitionBy("_bucket").parquet(commit_dir)
         # the sequence high-water mark: max seq EVER merged, deletes
         # included, never lowered — what lets a bulk/REST write allocate
@@ -470,24 +436,15 @@ class VersionedMirrorSink:
         for b in sorted(out_buckets):
             buckets[str(b)] = commit_id
             sizes[str(b)] = self._dir_bytes(commit_id, b)
-        os.makedirs(self._commits_dir, exist_ok=True)
-        tmp = os.path.join(self._commits_dir, f".tmp-v{version:08d}.json")
-        final = os.path.join(self._commits_dir, f"v{version:08d}.json")
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "version": version,
-                    "batch_id": batch_id,
-                    "writer_id": writer_id,
-                    "buckets": buckets,
-                    "num_buckets": num_buckets,
-                    "bucket_bytes": sizes,
-                    "max_seq": max_seq,
-                    "schema": json.loads(merged.drop("_bucket").schema.json()),
-                },
-                fh,
-            )
-        os.replace(tmp, final)  # the commit point (object store: one PUT)
+        log.commit(manifest, {  # the commit point (object store: one PUT)
+            "batch_id": batch_id,
+            "writer_id": writer_id,
+            "buckets": buckets,
+            "num_buckets": num_buckets,
+            "bucket_bytes": sizes,
+            "max_seq": max_seq,
+            "schema": json.loads(merged.drop("_bucket").schema.json()),
+        })
 
     def raise_high_water(self, max_seq: dict) -> None:
         """Metadata-only commit: bump the manifest's sequence
@@ -497,53 +454,23 @@ class VersionedMirrorSink:
         mark — its live rows' max seq can sit below offsets the source
         had already consumed (e.g. a high-seq delete), and a bulk
         write or replayed stream batch must still rank correctly."""
-        import json
-
         manifest = self.latest_manifest()
         if manifest is None:
             raise FileNotFoundError(f"no committed snapshot under {self.path}")
-        merged = _fold_max_seq(manifest.get("max_seq"), max_seq)
-        version = manifest["version"] + 1
-        tmp = os.path.join(self._commits_dir, f".tmp-v{version:08d}.json")
-        final = os.path.join(self._commits_dir, f"v{version:08d}.json")
-        with open(tmp, "w") as fh:
-            # batch_id carried over: the exactly-once replay guard for
-            # the last data batch must survive this metadata commit
-            json.dump({**manifest, "version": version, "max_seq": merged}, fh)
-        os.replace(tmp, final)
+        # batch_id carried over: the exactly-once replay guard for the
+        # last data batch must survive this metadata commit
+        self.log.commit(manifest, {
+            **manifest,
+            "max_seq": _fold_max_seq(manifest.get("max_seq"), max_seq),
+        })
 
     def vacuum(self, keep_versions: int = 1) -> int:
         """GC unreferenced commit dirs + manifests older than the last
-        ``keep_versions``. Maintenance only — correctness never depends
-        on any delete. Returns the number of commit dirs removed.
-
-        ``keep_versions`` must be >= 1: a mirror with zero committed
-        manifests is unreadable, so vacuuming down to nothing is never
-        a maintenance operation."""
-        import json
-        import shutil
-
-        if keep_versions < 1:
-            raise ValueError(f"keep_versions must be >= 1, got {keep_versions}")
-        names = self._manifests()
-        if not names:
-            return 0
-        keep = names[-keep_versions:]
-        # drop old manifests FIRST so a crash mid-vacuum can't leave a
-        # manifest referencing deleted data
-        for n in names[: len(names) - len(keep)]:
-            os.remove(os.path.join(self._commits_dir, n))
-        live: set[str] = set()
-        for n in keep:
-            with open(os.path.join(self._commits_dir, n)) as fh:
-                live |= set(json.load(fh)["buckets"].values())
-        removed = 0
-        if os.path.isdir(self._data_dir):
-            for e in os.listdir(self._data_dir):
-                if e.startswith("commit-") and e not in live:
-                    shutil.rmtree(os.path.join(self._data_dir, e))
-                    removed += 1
-        return removed
+        ``keep_versions`` (>= 1); see ``CommitLog.vacuum``. Returns the
+        number of commit dirs removed."""
+        return self.log.vacuum(
+            keep_versions, lambda m: m["buckets"].values()
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -723,55 +650,13 @@ class RollupSink:
         )
 
     @property
-    def _data_dir(self) -> str:
-        return os.path.join(self.path, "data")
-
-    @property
-    def _commits_dir(self) -> str:
-        return os.path.join(self.path, "_commits")
-
-    def _manifests(self) -> list[str]:
-        if not os.path.isdir(self._commits_dir):
-            return []
-        return sorted(
-            f for f in os.listdir(self._commits_dir)
-            if f.startswith("v") and f.endswith(".json")
-        )
-
-    def latest_manifest(self) -> dict | None:
-        import json
-
-        names = self._manifests()
-        if not names:
-            return None
-        with open(os.path.join(self._commits_dir, names[-1])) as fh:
-            return json.load(fh)
-
-    def exists(self) -> bool:
-        return bool(self._manifests())
-
-    def _manifest_at(self, version: "int | None") -> dict:
-        import json
-
-        if version is None:
-            manifest = self.latest_manifest()
-            if manifest is None:
-                raise FileNotFoundError(
-                    f"no committed rollup under {self.path}"
-                )
-            return manifest
-        name = f"v{version:08d}.json"
-        if name not in self._manifests():
-            raise FileNotFoundError(
-                f"no committed rollup version {version} under {self.path}"
-            )
-        with open(os.path.join(self._commits_dir, name)) as fh:
-            return json.load(fh)
+    def log(self) -> CommitLog:
+        return CommitLog(self.path)
 
     def _read_main(self, spark: SparkSession, manifest: dict) -> DataFrame:
         return spark.read.schema(
             T.StructType.fromJson(manifest["schema"])
-        ).parquet(os.path.join(self._data_dir, manifest["commit"], "main"))
+        ).parquet(os.path.join(self.log.data_dir, manifest["commit"], "main"))
 
     def _aux_bucket_expr(self, value_col) -> "F.Column":
         """The aux store's bucket key: pmod over the MERGE key
@@ -792,15 +677,15 @@ class RollupSink:
         read whole."""
         schema = T.StructType.fromJson(manifest["aux_schemas"][col])
         bucket_map = manifest.get("aux_buckets", {}).get(col)
+        data_dir = self.log.data_dir
         if bucket_map is None:  # legacy whole-store layout
             return spark.read.schema(schema).parquet(
-                os.path.join(self._data_dir, manifest["commit"],
-                             f"mm_{col}")
+                os.path.join(data_dir, manifest["commit"], f"mm_{col}")
             )
         wanted = (set(bucket_map) if buckets is None
                   else {str(b) for b in buckets} & set(bucket_map))
         dirs = [
-            os.path.join(self._data_dir, commit, f"mm_{col}",
+            os.path.join(data_dir, commit, f"mm_{col}",
                          f"bucket={b}")
             for b, commit in sorted(bucket_map.items())
             if b in wanted
@@ -821,7 +706,9 @@ class RollupSink:
         (avg's sum/valcnt) — the re-aggregation inputs rollup search
         needs (avg over a coarser bucket is SUM(sum)/SUM(valcnt),
         never avg-of-avgs)."""
-        manifest = self._manifest_at(version)
+        manifest = self.log.load(version)
+        if manifest is None:
+            raise FileNotFoundError(f"no committed rollup under {self.path}")
         out = self._read_main(spark, manifest)
         for c in self.minmax_cols:
             mm = (
@@ -874,13 +761,9 @@ class RollupSink:
         import uuid
 
         spark = deltas.sparkSession
-        manifest = self.latest_manifest()
-        if (
-            manifest is not None
-            and batch_id >= 0
-            and manifest.get("batch_id") == batch_id
-            and manifest.get("writer_id") == writer_id
-        ):
+        log = self.log
+        manifest = log.load()
+        if log.replays(manifest, batch_id, writer_id):
             return  # replayed batch: additive merge MUST NOT reapply
         if (manifest is not None
                 and "aux_num_buckets" in manifest
@@ -916,9 +799,8 @@ class RollupSink:
                 .agg(*[F.sum(c).alias(c) for c in metric_cols])
             )
         merged = agg.filter(F.col("doc_count") != 0)
-        version = (manifest["version"] + 1) if manifest else 1
         commit = f"commit-{uuid.uuid4().hex[:12]}"
-        commit_dir = os.path.join(self._data_dir, commit)
+        commit_dir = os.path.join(log.data_dir, commit)
         merged.write.mode("overwrite").parquet(
             os.path.join(commit_dir, "main")
         )
@@ -1005,47 +887,22 @@ class RollupSink:
             # hit 0) writes no dir and drops out of the map — that
             # disappearance IS the retraction, bucket-granular
             aux_buckets[c] = {**carried, **written}
-        os.makedirs(self._commits_dir, exist_ok=True)
-        tmp = os.path.join(self._commits_dir, f".tmp-v{version:08d}.json")
-        final = os.path.join(self._commits_dir, f"v{version:08d}.json")
-        with open(tmp, "w") as fh:
-            json.dump({
-                "version": version,
-                "batch_id": batch_id,
-                "writer_id": writer_id,
-                "commit": commit,
-                "schema": json.loads(merged.schema.json()),
-                "aux_schemas": aux_schemas,
-                "aux_buckets": aux_buckets,
-                "aux_num_buckets": self.aux_num_buckets,
-            }, fh)
-        os.replace(tmp, final)  # the commit point
+        log.commit(manifest, {  # the commit point
+            "batch_id": batch_id,
+            "writer_id": writer_id,
+            "commit": commit,
+            "schema": json.loads(merged.schema.json()),
+            "aux_schemas": aux_schemas,
+            "aux_buckets": aux_buckets,
+            "aux_num_buckets": self.aux_num_buckets,
+        })
 
     def vacuum(self, keep_versions: int = 1) -> int:
-        """GC old rollup versions (manifests first, so a crash can't
-        leave a manifest referencing deleted data)."""
-        import json
-        import shutil
-
-        if keep_versions < 1:
-            raise ValueError(f"keep_versions must be >= 1, got {keep_versions}")
-        names = self._manifests()
-        keep = names[-keep_versions:]
-        live = set()
-        for n in names[: len(names) - len(keep)]:
-            os.remove(os.path.join(self._commits_dir, n))
-        for n in keep:
-            with open(os.path.join(self._commits_dir, n)) as fh:
-                m = json.load(fh)
-            live.add(m["commit"])
-            # untouched aux buckets are REFERENCED from older commits,
-            # not rewritten — those commits stay live with the manifest
-            for bucket_map in m.get("aux_buckets", {}).values():
-                live.update(bucket_map.values())
-        removed = 0
-        if os.path.isdir(self._data_dir):
-            for e in os.listdir(self._data_dir):
-                if e.startswith("commit-") and e not in live:
-                    shutil.rmtree(os.path.join(self._data_dir, e))
-                    removed += 1
-        return removed
+        """GC old rollup versions; see ``CommitLog.vacuum``. Untouched
+        aux buckets are REFERENCED from older commits, not rewritten,
+        so those commits stay live with the manifest."""
+        return self.log.vacuum(keep_versions, lambda m: [
+            m["commit"],
+            *(c for bucket_map in m.get("aux_buckets", {}).values()
+              for c in bucket_map.values()),
+        ])

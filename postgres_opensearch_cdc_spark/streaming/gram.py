@@ -14,8 +14,8 @@ micro-batch that reaches the merge DOUBLE-COUNTS and the
 State is the fixed d(d+1)/2 upper-triangle doubles regardless of
 stream length — the mergeable-summary scale story again: per-batch
 cost is one Arrow-partial X^T X over the batch (kilobytes shuffled)
-plus an O(d²) merge, never a history rescan. Layout is the shared
-commit idiom: full triangle into a fresh commit dir, ONE atomic
+plus an O(d²) merge, never a history rescan. Layout is a
+commits.CommitLog: full triangle into a fresh commit dir, ONE atomic
 manifest rename publishing {version, commit, batch_id, writer_id,
 dim}; crash before the rename leaves the previous version live, and
 dimension is validated on BOTH write and read (a mismatched-d reader
@@ -29,7 +29,6 @@ batch SQL oracle knows nothing about the split.
 
 from __future__ import annotations
 
-import json
 import os
 import uuid
 from dataclasses import dataclass
@@ -37,6 +36,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from postgres_opensearch_cdc_spark.commits import CommitLog
 from postgres_opensearch_cdc_spark.queries.training_pipeline11 import (
     EMB_DIM,
     gram_upper,
@@ -62,27 +62,8 @@ class GramRollupSink:
     dim: int = EMB_DIM
 
     @property
-    def _data_dir(self) -> str:
-        return os.path.join(self.path, "data")
-
-    @property
-    def _commits_dir(self) -> str:
-        return os.path.join(self.path, "_commits")
-
-    def _manifests(self) -> list[str]:
-        if not os.path.isdir(self._commits_dir):
-            return []
-        return sorted(
-            f for f in os.listdir(self._commits_dir)
-            if f.startswith("v") and f.endswith(".json")
-        )
-
-    def latest_manifest(self) -> dict | None:
-        names = self._manifests()
-        if not names:
-            return None
-        with open(os.path.join(self._commits_dir, names[-1])) as fh:
-            return json.load(fh)
+    def log(self) -> CommitLog:
+        return CommitLog(self.path)
 
     def _check_dim(self, manifest: dict) -> None:
         if manifest.get("dim") != self.dim:
@@ -96,24 +77,20 @@ class GramRollupSink:
     def gram(self, spark: SparkSession) -> DataFrame:
         """The published (i, j, gram_raw) upper triangle (empty before
         the first commit). Read paths validate the dimension too."""
-        manifest = self.latest_manifest()
+        manifest = self.log.load()
         if manifest is None:
             return spark.createDataFrame([], _GRAM_SCHEMA)
         self._check_dim(manifest)
         return spark.read.schema(_GRAM_SCHEMA).parquet(
-            os.path.join(self._data_dir, manifest["commit"], "gram")
+            os.path.join(self.log.data_dir, manifest["commit"], "gram")
         )
 
     def apply_batch(self, batch: DataFrame, batch_id: int,
                     writer_id: str | None = None) -> None:
         spark = batch.sparkSession
-        manifest = self.latest_manifest()
-        if (
-            manifest is not None
-            and batch_id >= 0
-            and manifest.get("batch_id") == batch_id
-            and manifest.get("writer_id") == writer_id
-        ):
+        log = self.log
+        manifest = log.load()
+        if log.replays(manifest, batch_id, writer_id):
             return  # replay guard: MANDATORY — the merge below ADDS
         if manifest is not None:
             self._check_dim(manifest)
@@ -131,24 +108,13 @@ class GramRollupSink:
                 .groupBy("i", "j")
                 .agg(F.sum("gram_raw").alias("gram_raw"))
             )
-        version = (manifest["version"] + 1) if manifest else 1
         commit = f"commit-{uuid.uuid4().hex[:12]}"
         partial.write.mode("overwrite").parquet(
-            os.path.join(self._data_dir, commit, "gram")
+            os.path.join(log.data_dir, commit, "gram")
         )
-        os.makedirs(self._commits_dir, exist_ok=True)
-        tmp = os.path.join(self._commits_dir, f".v{version:08d}.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "version": version,
-                    "commit": commit,
-                    "batch_id": batch_id,
-                    "writer_id": writer_id,
-                    "dim": self.dim,
-                },
-                fh,
-            )
-        os.replace(
-            tmp, os.path.join(self._commits_dir, f"v{version:08d}.json")
-        )
+        log.commit(manifest, {
+            "commit": commit,
+            "batch_id": batch_id,
+            "writer_id": writer_id,
+            "dim": self.dim,
+        })

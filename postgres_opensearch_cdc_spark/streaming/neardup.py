@@ -39,12 +39,12 @@ appends is healed by the batch replay check plus owner-aware collision
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from postgres_opensearch_cdc_spark.commits import commit_batch, last_batch
 from postgres_opensearch_cdc_spark.functions.dedup import (
     minhash_signatures_from_arrays,
     shingle_arrays,
@@ -170,10 +170,6 @@ class NearDupSink:
         return os.path.join(self.path, "bandkeys")
 
     @property
-    def _meta(self) -> str:
-        return os.path.join(self.path, "_meta.json")
-
-    @property
     def _rpb(self) -> int:
         return self.num_hashes // self.bands
 
@@ -188,14 +184,6 @@ class NearDupSink:
             "shingle_n": self.shingle_n,
             "hasher": self.hasher,
         }
-
-    def _last_batch(self) -> int | None:
-        if not os.path.exists(self._meta):
-            return None
-        with open(self._meta) as fh:
-            meta = json.load(fh)
-        _check_layout(meta, self._layout, self.path)
-        return meta["batch_id"]
 
     def survivors(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self._survivors)
@@ -214,7 +202,7 @@ class NearDupSink:
 
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        last = self._last_batch()
+        last = last_batch(self.path, self._layout)
         if last is not None and batch_id >= 0 and batch_id <= last:
             return  # replayed batch — already applied
         key_cols = ["band"] + [f"k{r}" for r in range(self._rpb)]
@@ -261,25 +249,7 @@ class NearDupSink:
         keys.join(keep_ids, "id", "left_semi").select(
             *key_cols, F.col("id").alias("owner")
         ).write.mode("append").parquet(self._bandkeys)
-        os.makedirs(self.path, exist_ok=True)
-        tmp = self._meta + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"batch_id": batch_id, **self._layout}, fh)
-        os.replace(tmp, self._meta)
-
-
-def _check_layout(meta: dict, want: dict, path: str) -> None:
-    """Raise if a persisted store's layout parameters conflict with the
-    sink re-opening it — probing a store laid out under different
-    parameters (a different bucket modulus, window width, or hash
-    scheme) silently skips data instead of failing."""
-    for k, v in want.items():
-        if k in meta and meta[k] != v:
-            raise ValueError(
-                f"store at {path} was written with {k}={meta[k]}; this "
-                f"sink has {k}={v} — recreate the store or match the "
-                "persisted value"
-            )
+        commit_batch(self.path, batch_id, self._layout)
 
 
 @dataclass
@@ -371,24 +341,12 @@ class SpanDedupSink:
         return spark.read.schema(schema).parquet(*dirs)
 
     @property
-    def _meta(self) -> str:
-        return os.path.join(self.path, "_meta.json")
-
-    @property
     def _layout(self) -> dict:
         """Parameters that determine the store layout. ``num_buckets``
         is the critical one: probing bucket dirs laid out under a
         different modulus silently skips buckets and misses duplicate
         spans, so the persisted value is enforced on reopen."""
         return {"num_buckets": self.num_buckets, "window": self.window}
-
-    def _last_batch(self) -> int | None:
-        if not os.path.exists(self._meta):
-            return None
-        with open(self._meta) as fh:
-            meta = json.load(fh)
-        _check_layout(meta, self._layout, self.path)
-        return meta["batch_id"]
 
     def spans(self, spark: SparkSession) -> DataFrame:
         # distinct heals the crash-between-append-and-meta replay:
@@ -427,7 +385,7 @@ class SpanDedupSink:
         )
 
         spark = batch.sparkSession
-        last = self._last_batch()
+        last = last_batch(self.path, self._layout)
         if last is not None and batch_id >= 0 and batch_id <= last:
             return  # replayed batch — already applied
         # spread BEFORE the checkpoint: the micro-batch's partitioning
@@ -529,11 +487,7 @@ class SpanDedupSink:
             store_fut = pool.submit(_write_store)
             self._emit(batch, spans, batch_id)
             store_fut.result()
-        os.makedirs(self.path, exist_ok=True)
-        tmp = self._meta + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"batch_id": batch_id, **self._layout}, fh)
-        os.replace(tmp, self._meta)
+        commit_batch(self.path, batch_id, self._layout)
 
 
 @dataclass

@@ -55,12 +55,12 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from postgres_opensearch_cdc_spark.commits import commit_batch, last_batch
 from postgres_opensearch_cdc_spark.functions.similarity import (
     _as_double,
     assign_nearest,
     l2_norm,
 )
-from postgres_opensearch_cdc_spark.streaming.neardup import _check_layout
 
 
 @dataclass
@@ -86,10 +86,6 @@ class SemanticDedupSink:
         return os.path.join(self.path, "verdicts")
 
     @property
-    def _meta(self) -> str:
-        return os.path.join(self.path, "_meta.json")
-
-    @property
     def _layout(self) -> dict:
         """Parameters that determine store layout and verdicts.
         ``centroid_md5`` pins the fitted centroids themselves: reps
@@ -103,14 +99,6 @@ class SemanticDedupSink:
             "num_buckets": self.num_buckets,
             "centroid_md5": hashlib.md5(blob).hexdigest(),
         }
-
-    def _last_batch(self) -> int | None:
-        if not os.path.exists(self._meta):
-            return None
-        with open(self._meta) as fh:
-            meta = json.load(fh)
-        _check_layout(meta, self._layout, self.path)
-        return meta["batch_id"]
 
     def verdicts(self, spark: SparkSession) -> DataFrame:
         # distinct heals the crash-between-append-and-meta replay:
@@ -178,7 +166,7 @@ class SemanticDedupSink:
 
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        last = self._last_batch()
+        last = last_batch(self.path, self._layout)
         if last is not None and batch_id >= 0 and batch_id <= last:
             return  # replayed batch — already applied
         from postgres_opensearch_cdc_spark.functions.dedup import (
@@ -278,8 +266,4 @@ class SemanticDedupSink:
                 "append"
             ).parquet(self._reps)
             verdict_fut.result()
-        os.makedirs(self.path, exist_ok=True)
-        tmp = self._meta + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"batch_id": batch_id, **self._layout}, fh)
-        os.replace(tmp, self._meta)
+        commit_batch(self.path, batch_id, self._layout)

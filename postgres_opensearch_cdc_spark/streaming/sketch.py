@@ -15,7 +15,7 @@ property by re-applying batches with a DIFFERENT writer_id and
 demanding a byte-identical register table (the test additive stores
 must fail without their guard).
 
-Layout (the RollupSink commit idiom):
+Layout (a commits.CommitLog):
     <path>/data/<commit>/regs/   full (g, bucket, register) table
     <path>/_commits/vNNNNNNNN.json  manifest {version, commit,
                                     batch_id, writer_id, m}
@@ -35,7 +35,6 @@ value-checks stream ≡ batch through DuckDB."""
 
 from __future__ import annotations
 
-import json
 import os
 import uuid
 from dataclasses import dataclass
@@ -43,6 +42,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from postgres_opensearch_cdc_spark.commits import CommitLog
 from postgres_opensearch_cdc_spark.functions.sketch import (
     HLL_P,
     hll_estimates,
@@ -84,34 +84,15 @@ class HllRollupSink:
     p: int = HLL_P
 
     @property
-    def _data_dir(self) -> str:
-        return os.path.join(self.path, "data")
-
-    @property
-    def _commits_dir(self) -> str:
-        return os.path.join(self.path, "_commits")
-
-    def _manifests(self) -> list[str]:
-        if not os.path.isdir(self._commits_dir):
-            return []
-        return sorted(
-            f for f in os.listdir(self._commits_dir)
-            if f.startswith("v") and f.endswith(".json")
-        )
-
-    def latest_manifest(self) -> dict | None:
-        names = self._manifests()
-        if not names:
-            return None
-        with open(os.path.join(self._commits_dir, names[-1])) as fh:
-            return json.load(fh)
+    def log(self) -> CommitLog:
+        return CommitLog(self.path)
 
     def registers(self, spark: SparkSession) -> DataFrame:
         """The published (g, bucket, register) table (empty before the
         first commit). Read paths validate the precision too — a
         default-p reader over a p=14 store would otherwise compute
         zero_registers = 16 − count (nonsense) silently."""
-        manifest = self.latest_manifest()
+        manifest = self.log.load()
         if manifest is None:
             return spark.createDataFrame([], _REG_SCHEMA)
         m = hll_params(self.p)[0]
@@ -122,7 +103,7 @@ class HllRollupSink:
                 "estimates under a mismatched precision are garbage"
             )
         return spark.read.schema(_REG_SCHEMA).parquet(
-            os.path.join(self._data_dir, manifest["commit"], "regs")
+            os.path.join(self.log.data_dir, manifest["commit"], "regs")
         )
 
     def estimates(self, spark: SparkSession) -> DataFrame:
@@ -134,13 +115,9 @@ class HllRollupSink:
     def apply_batch(self, batch: DataFrame, batch_id: int,
                     writer_id: str | None = None) -> None:
         spark = batch.sparkSession
-        manifest = self.latest_manifest()
-        if (
-            manifest is not None
-            and batch_id >= 0
-            and manifest.get("batch_id") == batch_id
-            and manifest.get("writer_id") == writer_id
-        ):
+        log = self.log
+        manifest = log.load()
+        if log.replays(manifest, batch_id, writer_id):
             return  # replay: skipping is an optimization — the merge
             # below would be a no-op anyway (max is idempotent)
         m = hll_params(self.p)[0]
@@ -170,27 +147,16 @@ class HllRollupSink:
                 .groupBy("g", "bucket")
                 .agg(F.max("register").alias("register"))
             )
-        version = (manifest["version"] + 1) if manifest else 1
         commit = f"commit-{uuid.uuid4().hex[:12]}"
         regs.write.mode("overwrite").parquet(
-            os.path.join(self._data_dir, commit, "regs")
+            os.path.join(log.data_dir, commit, "regs")
         )
-        os.makedirs(self._commits_dir, exist_ok=True)
-        tmp = os.path.join(self._commits_dir, f".v{version:08d}.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "version": version,
-                    "commit": commit,
-                    "batch_id": batch_id,
-                    "writer_id": writer_id,
-                    "m": m,
-                },
-                fh,
-            )
-        os.replace(
-            tmp, os.path.join(self._commits_dir, f"v{version:08d}.json")
-        )
+        log.commit(manifest, {
+            "commit": commit,
+            "batch_id": batch_id,
+            "writer_id": writer_id,
+            "m": m,
+        })
 
 
 @dataclass
@@ -203,11 +169,12 @@ class CmsRollupSink:
     manifest guard is a CORRECTNESS requirement, not an optimization
     (the exact opposite of the register store's idempotent max; both
     properties are pinned side by side in tests/test_hll_stream.py).
-    Same commit idiom: full grid into a fresh commit dir, ONE atomic
-    manifest rename; crash before the rename leaves the previous
-    version live and the replay re-derives and publishes the same
-    merge (the guard compares against the last PUBLISHED manifest, so
-    an unpublished crashed attempt is invisible to it).
+    Same commit protocol (commits.CommitLog): full grid into a fresh
+    commit dir, ONE atomic manifest rename; crash before the rename
+    leaves the previous version live and the replay re-derives and
+    publishes the same merge (the guard compares against the last
+    PUBLISHED manifest, so an unpublished crashed attempt is
+    invisible to it).
 
     State is the fixed depth x width grid regardless of stream length
     — the mergeable-summary scale story; estimates for any probe
@@ -225,27 +192,8 @@ class CmsRollupSink:
     width: int = CMS_WIDTH
 
     @property
-    def _data_dir(self) -> str:
-        return os.path.join(self.path, "data")
-
-    @property
-    def _commits_dir(self) -> str:
-        return os.path.join(self.path, "_commits")
-
-    def _manifests(self) -> list[str]:
-        if not os.path.isdir(self._commits_dir):
-            return []
-        return sorted(
-            f for f in os.listdir(self._commits_dir)
-            if f.startswith("v") and f.endswith(".json")
-        )
-
-    def latest_manifest(self) -> dict | None:
-        names = self._manifests()
-        if not names:
-            return None
-        with open(os.path.join(self._commits_dir, names[-1])) as fh:
-            return json.load(fh)
+    def log(self) -> CommitLog:
+        return CommitLog(self.path)
 
     def cells(self, spark: SparkSession) -> DataFrame:
         """The published (r, bucket, cell) grid (empty before the
@@ -253,7 +201,7 @@ class CmsRollupSink:
         paths validate the geometry too — a default-width reader over
         a 2^16-wide store would probe wrong buckets and could return
         UNDER-estimates, silently breaking the one-sided contract."""
-        manifest = self.latest_manifest()
+        manifest = self.log.load()
         if manifest is None:
             return spark.createDataFrame([], _CMS_SCHEMA)
         if (
@@ -267,7 +215,7 @@ class CmsRollupSink:
                 "mismatched geometry land on wrong buckets"
             )
         return spark.read.schema(_CMS_SCHEMA).parquet(
-            os.path.join(self._data_dir, manifest["commit"], "cells")
+            os.path.join(self.log.data_dir, manifest["commit"], "cells")
         )
 
     def coords(self, frame: DataFrame, value_col: str) -> DataFrame:
@@ -315,13 +263,9 @@ class CmsRollupSink:
     def apply_batch(self, batch: DataFrame, batch_id: int,
                     writer_id: str | None = None) -> None:
         spark = batch.sparkSession
-        manifest = self.latest_manifest()
-        if (
-            manifest is not None
-            and batch_id >= 0
-            and manifest.get("batch_id") == batch_id
-            and manifest.get("writer_id") == writer_id
-        ):
+        log = self.log
+        manifest = log.load()
+        if log.replays(manifest, batch_id, writer_id):
             return  # replay: MANDATORY skip — additive merge would
             # double-count (see class docstring)
         if manifest is not None and (
@@ -358,25 +302,14 @@ class CmsRollupSink:
             F.col("bucket").cast("long"),
             F.col("cell").cast("long"),
         )
-        version = (manifest["version"] + 1) if manifest else 1
         commit = f"commit-{uuid.uuid4().hex[:12]}"
         cells.write.mode("overwrite").parquet(
-            os.path.join(self._data_dir, commit, "cells")
+            os.path.join(log.data_dir, commit, "cells")
         )
-        os.makedirs(self._commits_dir, exist_ok=True)
-        tmp = os.path.join(self._commits_dir, f".v{version:08d}.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "version": version,
-                    "commit": commit,
-                    "batch_id": batch_id,
-                    "writer_id": writer_id,
-                    "depth": self.depth,
-                    "width": self.width,
-                },
-                fh,
-            )
-        os.replace(
-            tmp, os.path.join(self._commits_dir, f"v{version:08d}.json")
-        )
+        log.commit(manifest, {
+            "commit": commit,
+            "batch_id": batch_id,
+            "writer_id": writer_id,
+            "depth": self.depth,
+            "width": self.width,
+        })

@@ -107,8 +107,8 @@ def test_crash_between_data_and_manifest_heals_on_replay(spark):
     final = _gram(spark, sink)
 
     # crash: lose the batch-1 publish
-    names = sorted(os.listdir(sink._commits_dir))
-    os.remove(os.path.join(sink._commits_dir, names[-1]))
+    names = sorted(os.listdir(sink.log.commits_dir))
+    os.remove(os.path.join(sink.log.commits_dir, names[-1]))
     partial = _gram(spark, sink)
     assert partial != final  # previous version is live
 

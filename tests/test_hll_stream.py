@@ -75,7 +75,7 @@ def test_stream_equals_batch_through_real_checkpointed_stream(spark):
     run_once()
     assert _rows(spark, sink) == _want(spark)
     # two stream launches => at least two commits published
-    assert sink.latest_manifest()["version"] >= 2
+    assert sink.log.load()["version"] >= 2
 
 
 def test_replay_is_noop_same_and_different_writer(spark):
@@ -91,14 +91,14 @@ def test_replay_is_noop_same_and_different_writer(spark):
     b = _batch(spark, DATA)
     sink.apply_batch(b, 0, writer_id="w1")
     before = _rows(spark, sink)
-    v_before = sink.latest_manifest()["version"]
+    v_before = sink.log.load()["version"]
 
     sink.apply_batch(b, 0, writer_id="w1")  # guard path: skipped whole
-    assert sink.latest_manifest()["version"] == v_before
+    assert sink.log.load()["version"] == v_before
     assert _rows(spark, sink) == before
 
     sink.apply_batch(b, 0, writer_id="w2")  # merge path: idempotent
-    assert sink.latest_manifest()["version"] == v_before + 1
+    assert sink.log.load()["version"] == v_before + 1
     assert _rows(spark, sink) == before
 
 
@@ -116,8 +116,8 @@ def test_crash_between_data_and_manifest_heals_on_replay(spark):
     final = _rows(spark, sink)
 
     # simulate the crash: data dir written, manifest never published
-    names = sorted(os.listdir(sink._commits_dir))
-    os.remove(os.path.join(sink._commits_dir, names[-1]))
+    names = sorted(os.listdir(sink.log.commits_dir))
+    os.remove(os.path.join(sink.log.commits_dir, names[-1]))
     assert _rows(spark, sink) == first  # previous version still live
 
     sink.apply_batch(_batch(spark, DATA[60:]), 1, writer_id="w")
@@ -131,8 +131,8 @@ def test_precision_mismatch_raises(spark):
     )
     sink.apply_batch(_batch(spark, DATA[:10]), 0, writer_id="w")
     # forge a store written under a different precision
-    names = sorted(os.listdir(sink._commits_dir))
-    mpath = os.path.join(sink._commits_dir, names[-1])
+    names = sorted(os.listdir(sink.log.commits_dir))
+    mpath = os.path.join(sink.log.commits_dir, names[-1])
     with open(mpath) as fh:
         manifest = json.load(fh)
     manifest["m"] = HLL_M * 2
@@ -244,8 +244,8 @@ def test_cms_crash_heals_and_estimates_are_one_sided(spark):
     sink.apply_batch(_ev(spark, CMS_DATA[150:]), 1, writer_id="w")
     final = _cms_cells(spark, sink)
 
-    names = sorted(os.listdir(sink._commits_dir))
-    os.remove(os.path.join(sink._commits_dir, names[-1]))
+    names = sorted(os.listdir(sink.log.commits_dir))
+    os.remove(os.path.join(sink.log.commits_dir, names[-1]))
     assert _cms_cells(spark, sink) == first
     sink.apply_batch(_ev(spark, CMS_DATA[150:]), 1, writer_id="w")
     assert _cms_cells(spark, sink) == final
@@ -273,8 +273,8 @@ def test_cms_geometry_mismatch_raises(spark):
     workdir = tempfile.mkdtemp(prefix="cms_sink_t4_")
     sink = CmsRollupSink(path=f"{workdir}/st", value_col="user_id")
     sink.apply_batch(_ev(spark, CMS_DATA[:50]), 0, writer_id="w")
-    names = sorted(os.listdir(sink._commits_dir))
-    mpath = os.path.join(sink._commits_dir, names[-1])
+    names = sorted(os.listdir(sink.log.commits_dir))
+    mpath = os.path.join(sink.log.commits_dir, names[-1])
     with open(mpath) as fh:
         manifest = _json.load(fh)
     manifest["width"] = 512

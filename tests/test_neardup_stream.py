@@ -175,7 +175,8 @@ def test_span_sink_crash_between_append_and_meta_heals(spark, tmp_path):
     sink.apply_batch(docs(spark, [(1, SHARED)]), 0)
     sink.apply_batch(docs(spark, [(2, "x0 " + SHARED)]), 1)
     assert span_rows(spark, sink) == {(2, 1, 16, 6)}
-    os.remove(sink._meta)  # simulate crash before the meta commit
+    # simulate crash before the meta commit
+    os.remove(os.path.join(sink.path, "_meta.json"))
     sink.apply_batch(docs(spark, [(2, "x0 " + SHARED)]), 1)  # replay
     raw = spark.read.parquet(sink._spans).count()
     assert raw == 2  # at-least-once raw appends...
@@ -334,7 +335,7 @@ def test_span_trim_sink_stream_equals_batch(spark, tmp_path):
 
     # crash: meta lost after batch-1 appends; replay re-derives the
     # identical clean rows and the reader's distinct heals the log
-    os.remove(sink._meta)
+    os.remove(os.path.join(sink.path, "_meta.json"))
     sink.apply_batch(docs(spark, corpus[3:]), 1)
     raw = spark.read.parquet(sink._clean).count()
     assert raw == 9  # 6 + replayed 3: at-least-once raw appends...
@@ -373,7 +374,7 @@ def test_span_trim_crash_replay_with_within_batch_repeat(spark, tmp_path):
     assert rows(sink.clean(spark).drop("batch_id")) == want
 
     # crash between the appends and the meta commit, then replay
-    os.remove(sink._meta)
+    os.remove(os.path.join(sink.path, "_meta.json"))
     sink.apply_batch(docs(spark, corpus), 0)
     healed = rows(sink.clean(spark).drop("batch_id"))
     assert healed == want  # ONE row per doc — replay was deterministic

@@ -641,7 +641,7 @@ def test_rollup_crash_before_manifest_heals_on_replay(spark, tmp_path):
 
     assert state() == want
     # crash: drop batch 1's manifest but leave its data dirs
-    [m1] = glob.glob(os.path.join(sink._commits_dir, "v00000002.json"))
+    [m1] = glob.glob(os.path.join(sink.log.commits_dir, "v00000002.json"))
     os.remove(m1)
     assert state() == {("a", 1, 10.0, 10.0, 10.0)}  # orphan invisible
     sink.apply_batch(deltas([("a", 1, 5.0, 1, 5.0)]), 1, writer_id="w")
@@ -804,14 +804,14 @@ def test_rollup_aux_store_rewrites_only_touched_buckets(spark, tmp_path):
     # seed enough distinct (group, value) pairs to cover every bucket
     _apply(spark, sink,
            [(i, f"S{i % 4}", float(i)) for i in range(64)], 0)
-    m1 = sink.latest_manifest()
+    m1 = sink.log.load()
     map1 = m1["aux_buckets"]["amount"]
     assert set(map1) == {str(b) for b in range(8)}  # all buckets live
     assert set(map1.values()) == {m1["commit"]}
 
     # one-row batch: touches exactly the buckets of its ±pairs
     _apply(spark, sink, [(100, "S0", 1000.0)], 1)
-    m2 = sink.latest_manifest()
+    m2 = sink.log.load()
     map2 = m2["aux_buckets"]["amount"]
     probe = spark.createDataFrame(
         [(100, "S0", 1000.0)], TXN_SCHEMA
@@ -823,7 +823,7 @@ def test_rollup_aux_store_rewrites_only_touched_buckets(spark, tmp_path):
     # new commit holds ONLY the touched buckets...
     on_disk = {
         d.split("=", 1)[1]
-        for d in os.listdir(os.path.join(sink._data_dir, m2["commit"],
+        for d in os.listdir(os.path.join(sink.log.data_dir, m2["commit"],
                                          "mm_amount"))
         if d.startswith("bucket=")
     }
@@ -860,7 +860,7 @@ def test_rollup_aux_bucket_retraction_and_empty_bucket_drop(spark, tmp_path):
     _apply(spark, sink, [(2, "A", 7.0)], 1, sign=-1)  # delete the max
     assert _minmax(spark, sink)["A"] == (5.0, 5.0)
     total_rows = sum(
-        sink._read_aux(spark, sink.latest_manifest(), "amount").count()
+        sink._read_aux(spark, sink.log.load(), "amount").count()
         for _ in [0]
     )
     assert total_rows == 1  # only (A, 5.0) survives across all buckets
@@ -908,8 +908,8 @@ def test_rollup_legacy_whole_store_manifest_migrates(spark, tmp_path):
     _apply(spark, sink, [(1, "A", 5.0), (2, "B", 9.0)], 0)
     # rewrite the store into the LEGACY v1 shape: flat mm_amount dir,
     # manifest without aux_buckets/aux_num_buckets
-    m = sink.latest_manifest()
-    commit_dir = os.path.join(sink._data_dir, m["commit"])
+    m = sink.log.load()
+    commit_dir = os.path.join(sink.log.data_dir, m["commit"])
     legacy_aux = sink._read_aux(spark, m, "amount").collect()
     import shutil
     shutil.rmtree(os.path.join(commit_dir, "mm_amount"))
@@ -919,13 +919,13 @@ def test_rollup_legacy_whole_store_manifest_migrates(spark, tmp_path):
         os.path.join(commit_dir, "mm_amount"))
     for k in ("aux_buckets", "aux_num_buckets"):
         m.pop(k)
-    with open(os.path.join(sink._commits_dir,
+    with open(os.path.join(sink.log.commits_dir,
                            f"v{m['version']:08d}.json"), "w") as fh:
         json.dump(m, fh)
 
     assert _minmax(spark, sink) == {"A": (5.0, 5.0), "B": (9.0, 9.0)}
     _apply(spark, sink, [(3, "A", 1.0)], 1)  # triggers the migration
-    m2 = sink.latest_manifest()
+    m2 = sink.log.load()
     assert m2["aux_num_buckets"] == 8
     amap = m2["aux_buckets"]["amount"]
     assert set(amap.values()) == {m2["commit"]}  # fully re-bucketed
@@ -976,16 +976,16 @@ def test_rollup_all_null_minmax_first_commit_writes_no_aux(spark, tmp_path):
     extrema, and a later non-null delta starts the aux store."""
     sink = _mk_sink(tmp_path, nb=4)
     _apply(spark, sink, [(1, "A", None), (2, "B", None), (3, "A", None)], 0)
-    m1 = sink.latest_manifest()
-    assert os.listdir(os.path.join(sink._data_dir, m1["commit"])) == ["main"]
+    m1 = sink.log.load()
+    assert os.listdir(os.path.join(sink.log.data_dir, m1["commit"])) == ["main"]
     assert m1["aux_buckets"] == {"amount": {}}
     assert sorted(tuple(r) for r in sink.read(spark).collect()) == [
         ("A", 2, None, None), ("B", 1, None, None),
     ]
 
     _apply(spark, sink, [(4, "A", 3.0), (5, "A", 9.0)], 1)
-    m2 = sink.latest_manifest()
-    assert "mm_amount" in os.listdir(os.path.join(sink._data_dir, m2["commit"]))
+    m2 = sink.log.load()
+    assert "mm_amount" in os.listdir(os.path.join(sink.log.data_dir, m2["commit"]))
     assert _minmax(spark, sink) == {"A": (3.0, 9.0), "B": (None, None)}
     assert sorted(tuple(r) for r in sink.read(spark).collect()) == [
         ("A", 4, 3.0, 9.0), ("B", 1, None, None),
@@ -999,14 +999,14 @@ def test_rollup_empty_delta_commits_and_carries_forward(spark, tmp_path):
     aux store is carried forward and the rollup reads back unchanged."""
     sink = _mk_sink(tmp_path, nb=4)
     _apply(spark, sink, [(1, "A", 3.0), (2, "B", 7.0), (3, "A", 9.0)], 0)
-    m1 = sink.latest_manifest()
+    m1 = sink.log.load()
     before = sorted(tuple(r) for r in sink.read(spark).collect())
 
     _apply(spark, sink, [], 1)
-    m2 = sink.latest_manifest()
+    m2 = sink.log.load()
     assert m2["version"] == m1["version"] + 1 and m2["batch_id"] == 1
     assert m2["aux_buckets"] == m1["aux_buckets"]
     assert m2["aux_schemas"] == m1["aux_schemas"]
-    assert "mm_amount" not in os.listdir(os.path.join(sink._data_dir, m2["commit"]))
+    assert "mm_amount" not in os.listdir(os.path.join(sink.log.data_dir, m2["commit"]))
     assert sorted(tuple(r) for r in sink.read(spark).collect()) == before
     assert _minmax(spark, sink) == {"A": (3.0, 9.0), "B": (7.0, 7.0)}

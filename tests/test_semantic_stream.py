@@ -76,10 +76,10 @@ class TestSemanticSink:
         sink.apply_batch(batch, 1)
         committed = _pairs(sink, spark)
         # simulate the crash: appends landed, meta did not
-        with open(sink._meta) as fh:
+        with open(os.path.join(sink.path, "_meta.json")) as fh:
             meta = json.load(fh)
         meta["batch_id"] = 0
-        with open(sink._meta, "w") as fh:
+        with open(os.path.join(sink.path, "_meta.json"), "w") as fh:
             json.dump(meta, fh)
         sink.apply_batch(batch, 1)  # replay
         assert _pairs(sink, spark) == committed

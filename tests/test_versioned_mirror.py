@@ -151,7 +151,7 @@ def test_vacuum_keeps_live_commits(spark, sink):
     assert live <= remaining
     assert {r["v"] for r in sink.read(spark).collect()} == {"v3"}
     # exactly one manifest left
-    assert len(sink._manifests()) == 1
+    assert len(sink.log.names()) == 1
 
 
 def test_vacuum_zero_keep_versions_rejected(spark, sink):
@@ -160,12 +160,12 @@ def test_vacuum_zero_keep_versions_rejected(spark, sink):
     leave the mirror untouched."""
     for i in range(3):
         sink.apply_batch(chg(spark, [("u", 1, f"v{i}", i)]), batch_id=i)
-    manifests_before = sink._manifests()
+    manifests_before = sink.log.names()
     with pytest.raises(ValueError, match="keep_versions"):
         sink.vacuum(keep_versions=0)
     with pytest.raises(ValueError, match="keep_versions"):
         sink.vacuum(keep_versions=-1)
-    assert sink._manifests() == manifests_before
+    assert sink.log.names() == manifests_before
     assert {r["v"] for r in sink.read(spark).collect()} == {"v2"}
 
 

@@ -75,9 +75,9 @@ def run_config(spark, name: str, n_pairs: int, nb: int) -> dict:
         0, writer_id="seed",
     )
     store_bytes = 0
-    m = sink.latest_manifest()
+    m = sink.log.load()
     for b, commit in m["aux_buckets"]["amount"].items():
-        d = os.path.join(sink._data_dir, commit, "mm_amount",
+        d = os.path.join(sink.log.data_dir, commit, "mm_amount",
                          f"bucket={b}")
         store_bytes += sum(
             os.path.getsize(os.path.join(d, f)) for f in os.listdir(d)
@@ -90,7 +90,7 @@ def run_config(spark, name: str, n_pairs: int, nb: int) -> dict:
         t0 = time.monotonic()
         sink.apply_batch(delta, rep + 1, writer_id="bench")
         times.append(time.monotonic() - t0)
-    m = sink.latest_manifest()
+    m = sink.log.load()
     touched = len([
         c for c in m["aux_buckets"]["amount"].values()
         if c == m["commit"]

@@ -132,7 +132,7 @@ def measure(spark, sf_dir: str, tmp: str, replicate: int = 1) -> list[dict]:
         # bytes REWRITTEN by one merge = the newest commit dir's size;
         # this is the number that scales (local latency at these sizes
         # is commit-file overhead, the bytes curve is the predictor)
-        data_dir = os.path.join(path, "data")
+        data_dir = sink.log.data_dir
         newest = max(os.listdir(data_dir))
         commit_bytes = sum(
             os.path.getsize(os.path.join(dp, f))
