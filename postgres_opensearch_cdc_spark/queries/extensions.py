@@ -26,7 +26,9 @@ from postgres_opensearch_cdc_spark.functions.dedup import (
     word_shingles,
 )
 from postgres_opensearch_cdc_spark.functions.similarity import brute_force_topk
-from postgres_opensearch_cdc_spark.registry import fingerprint, load_table, memo
+from postgres_opensearch_cdc_spark.registry import (
+    fingerprint, load_table, memo, stream_in_halves,
+)
 
 _LANG_ORDER = ["en", "de", "fr", "es", "zh"]
 
@@ -2033,40 +2035,13 @@ def dedup_span_trim_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole corpus, so the oracle is dedup_span_trim's SQL verbatim: a
     value match proves the stream ≡ batch equivalence end-to-end
     (checkpoint, replay guard, bucketed winhash store and all)."""
-    import tempfile
-
     from postgres_opensearch_cdc_spark.streaming.neardup import SpanTrimSink
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # arrival order must refine doc_id order for stream == batch:
-    # split at the median id, low half first (two driver-side scalars)
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).head()
-    mid = (lo + hi) // 2
-    workdir = tempfile.mkdtemp(prefix="span_trim_stream_")
-    src_dir = f"{workdir}/in"
-    ckpt = f"{workdir}/ckpt"
-    sink = SpanTrimSink(path=f"{workdir}/st", window=SPAN_WINDOW)
-
-    def run_once():
-        stream = spark.readStream.schema(
-            "doc_id long, text string"
-        ).parquet(src_dir)
-        q = (
-            stream.writeStream.foreachBatch(sink.apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-
-    # few source files per half: the stream lists + opens each file,
-    # and 5k rows don't need 32-way write parallelism
-    docs.filter(F.col("doc_id") <= mid).coalesce(4).write.mode(
-        "append").parquet(src_dir)
-    run_once()
-    docs.filter(F.col("doc_id") > mid).coalesce(4).write.mode(
-        "append").parquet(src_dir)
-    run_once()
+    sink = stream_in_halves(
+        docs, "doc_id",
+        lambda path: SpanTrimSink(path=path, window=SPAN_WINDOW),
+    )
     return sink.clean(spark).select(
         "id", "clean_text", "kept_tokens", "removed_tokens"
     ).orderBy("id")

@@ -47,7 +47,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from postgres_opensearch_cdc_spark.queries.training_pipeline11 import (
     EMB_DIM,
 )
-from postgres_opensearch_cdc_spark.registry import load_table
+from postgres_opensearch_cdc_spark.registry import (
+    load_table, stream_in_halves,
+)
 
 _TOKS_SQL = r"regexp_split_to_array(lower(text), '\s+')"
 
@@ -65,11 +67,8 @@ def embedding_gram_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     must equal the one-shot batch Gram — the oracle (the batch SQL)
     knows nothing about the split. float32 embeddings are cast to
     array<double> BEFORE the stream hop so the staged rows carry the
-    exact doubles the batch Gram sums (the hop is parquet since r14 —
-    the cast now simply matches the declared read schema; under the
-    original JSON hop it was what kept the round-trip exact)."""
-    import tempfile
-
+    exact doubles the batch Gram sums (the hop is parquet, read back
+    with the frame's own schema, so the promotion is exact)."""
     from postgres_opensearch_cdc_spark.streaming.gram import GramRollupSink
 
     emb = load_table(spark, sf_dir, "embeddings").select(
@@ -78,41 +77,11 @@ def embedding_gram_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "embedding"
         ),
     )
-    lo, hi = emb.agg(F.min("vec_id"), F.max("vec_id")).head()
-    if lo is None:
-        raise ValueError(
-            "embeddings table is empty — nothing to stream "
-            "(vec_id min/max are NULL)"
-        )
-    mid = (lo + hi) // 2
-    workdir = tempfile.mkdtemp(prefix="gram_stream_")
-    src_dir = f"{workdir}/in"
-    ckpt = f"{workdir}/ckpt"
-    sink = GramRollupSink(path=f"{workdir}/st", dim=EMB_DIM)
-
-    def run_once():
-        stream = spark.readStream.schema(
-            "vec_id long, embedding array<double>"
-        ).parquet(src_dir)
-        q = (
-            stream.writeStream.foreachBatch(
-                lambda b, bid: sink.apply_batch(b, bid, writer_id=ckpt)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-
-    emb.filter(F.col("vec_id") <= mid).coalesce(4).write.mode(
-        "append"
-    ).parquet(src_dir)
-    run_once()
-    emb.filter(F.col("vec_id") > mid).coalesce(4).write.mode(
-        "append"
-    ).parquet(src_dir)
-    run_once()
-
+    sink = stream_in_halves(
+        emb, "vec_id",
+        lambda path: GramRollupSink(path=path, dim=EMB_DIM),
+        keyed=True,
+    )
     return (
         sink.gram(spark)
         .select("i", "j", F.round("gram_raw", 6).alias("gram"))

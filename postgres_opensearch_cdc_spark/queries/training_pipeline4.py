@@ -47,7 +47,9 @@ from postgres_opensearch_cdc_spark.functions.similarity import (
     l2_norm,
     sq_l2,
 )
-from postgres_opensearch_cdc_spark.registry import load_table, memo
+from postgres_opensearch_cdc_spark.registry import (
+    load_table, memo, stream_in_halves,
+)
 
 # --- semantic dedup (SemDeDup: k-means then within-cluster prune) ----
 SEM_K = 8          # clusters (production: ~sqrt(corpus) to 100k)
@@ -472,8 +474,6 @@ def dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit-vector list — so checkpointing, the replay guard, the
     bucketed rep store, and the greedy kernel are all value-checked
     end to end."""
-    import tempfile
-
     from postgres_opensearch_cdc_spark.streaming.semantic import (
         SemanticDedupSink,
     )
@@ -482,35 +482,12 @@ def dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    lo, hi = vecs.agg(F.min("vec_id"), F.max("vec_id")).head()
-    mid = (lo + hi) // 2
-    workdir = tempfile.mkdtemp(prefix="semantic_stream_")
-    src_dir = f"{workdir}/in"
-    ckpt = f"{workdir}/ckpt"
-    sink = SemanticDedupSink(
-        path=f"{workdir}/st", centroids=cents, eps=SEM_EPS
+    sink = stream_in_halves(
+        vecs, "vec_id",
+        lambda path: SemanticDedupSink(
+            path=path, centroids=cents, eps=SEM_EPS
+        ),
     )
-
-    def run_once():
-        stream = spark.readStream.schema(
-            "vec_id long, embedding array<float>"
-        ).parquet(src_dir)
-        q = (
-            stream.writeStream.foreachBatch(sink.apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-
-    vecs.filter(F.col("vec_id") <= mid).coalesce(4).write.mode(
-        "append"
-    ).parquet(src_dir)
-    run_once()
-    vecs.filter(F.col("vec_id") > mid).coalesce(4).write.mode(
-        "append"
-    ).parquet(src_dir)
-    run_once()
     return (
         sink.verdicts(spark)
         .select("vec_id", "cluster", "kept")

@@ -71,7 +71,9 @@ from postgres_opensearch_cdc_spark.functions.sketch import (
     hll_estimates,
     hll_registers,
 )
-from postgres_opensearch_cdc_spark.registry import load_table
+from postgres_opensearch_cdc_spark.registry import (
+    load_table, stream_in_halves,
+)
 
 _TOKS_SQL = r"regexp_split_to_array(lower(text), '\s+')"
 
@@ -165,8 +167,6 @@ def sketch_hll_rollup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-checks (the batch SQL knows nothing about the split). The
     checkpointed plumbing, commit/manifest publish, merge kernel, and
     estimator all sit inside the checked path."""
-    import tempfile
-
     from postgres_opensearch_cdc_spark.streaming.sketch import (
         HllRollupSink,
     )
@@ -174,37 +174,13 @@ def sketch_hll_rollup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "user_id"
     )
-    lo, hi = events.agg(F.min("event_id"), F.max("event_id")).head()
-    mid = (lo + hi) // 2
-    workdir = tempfile.mkdtemp(prefix="hll_rollup_stream_")
-    src_dir = f"{workdir}/in"
-    ckpt = f"{workdir}/ckpt"
-    sink = HllRollupSink(
-        path=f"{workdir}/st", group_col="event_type", value_col="user_id"
+    sink = stream_in_halves(
+        events, "event_id",
+        lambda path: HllRollupSink(
+            path=path, group_col="event_type", value_col="user_id"
+        ),
+        keyed=True,
     )
-
-    def run_once():
-        stream = spark.readStream.schema(
-            "event_id long, event_type string, user_id long"
-        ).parquet(src_dir)
-        q = (
-            stream.writeStream.foreachBatch(
-                lambda b, bid: sink.apply_batch(b, bid, writer_id=ckpt)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-
-    events.filter(F.col("event_id") <= mid).coalesce(4).write.mode(
-        "append"
-    ).parquet(src_dir)
-    run_once()
-    events.filter(F.col("event_id") > mid).coalesce(4).write.mode(
-        "append"
-    ).parquet(src_dir)
-    run_once()
 
     exact = events.groupBy(F.col("event_type").alias("g")).agg(
         F.countDistinct("user_id").alias("n_exact")
@@ -237,8 +213,6 @@ def sketch_cms_rollup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-sided overestimate. Oracle: batch SQL rebuilding the same
     grid from the whole table — stream ≡ batch because cell addition
     is associative/commutative across any batch split."""
-    import tempfile
-
     from postgres_opensearch_cdc_spark.streaming.sketch import (
         CmsRollupSink,
     )
@@ -246,35 +220,11 @@ def sketch_cms_rollup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id"
     )
-    lo, hi = events.agg(F.min("event_id"), F.max("event_id")).head()
-    mid = (lo + hi) // 2
-    workdir = tempfile.mkdtemp(prefix="cms_rollup_stream_")
-    src_dir = f"{workdir}/in"
-    ckpt = f"{workdir}/ckpt"
-    sink = CmsRollupSink(path=f"{workdir}/st", value_col="user_id")
-
-    def run_once():
-        stream = spark.readStream.schema(
-            "event_id long, user_id long"
-        ).parquet(src_dir)
-        q = (
-            stream.writeStream.foreachBatch(
-                lambda b, bid: sink.apply_batch(b, bid, writer_id=ckpt)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-
-    events.filter(F.col("event_id") <= mid).coalesce(4).write.mode(
-        "append"
-    ).parquet(src_dir)
-    run_once()
-    events.filter(F.col("event_id") > mid).coalesce(4).write.mode(
-        "append"
-    ).parquet(src_dir)
-    run_once()
+    sink = stream_in_halves(
+        events, "event_id",
+        lambda path: CmsRollupSink(path=path, value_col="user_id"),
+        keyed=True,
+    )
 
     top = (
         events.groupBy("user_id")

@@ -15,10 +15,11 @@ the CDC-apply unit tests.
 from __future__ import annotations
 
 import os
+import tempfile
 import time
 from collections import Counter
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
@@ -276,8 +277,6 @@ def load_table(
         # integer division (never float division: int64 nanos exceed
         # double's 53-bit exact range), matching DuckDB's truncating
         # TIMESTAMP_NS → TIMESTAMP semantics
-        from pyspark.sql import functions as F
-
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         nanos_schema = T.StructType(
             [
@@ -295,6 +294,47 @@ def load_table(
         reader = reader.schema(schema)
     df = reader.parquet(path)
     return spread_scan(spark, df, path) if spread else df
+
+
+def stream_in_halves(frame: DataFrame, id_col: str, make_sink,
+                     keyed: bool = False):
+    """Feed ``frame`` to a fresh sink as two ``id_col``-ordered
+    micro-batches through a real checkpointed stream, and return the
+    sink. The frame splits at the median id: the low half lands as
+    source files and one ``availableNow`` foreachBatch run drains it,
+    then the high half and a second run. Arrival order refines id
+    order, so a stream-equals-batch entry can check the sink's store
+    against the batch operator over the whole frame.
+
+    ``make_sink(path)`` builds the sink on a fresh store dir; with
+    ``keyed`` each batch is applied with the checkpoint dir as its
+    ``writer_id`` (the versioned stores' replay key)."""
+    lo, hi = frame.agg(F.min(id_col), F.max(id_col)).head()
+    if lo is None:
+        raise ValueError(
+            f"nothing to stream: {id_col} min/max are NULL (empty table)"
+        )
+    mid = (lo + hi) // 2
+    workdir = tempfile.mkdtemp(prefix="stream_in_halves_")
+    src_dir, ckpt = f"{workdir}/in", f"{workdir}/ckpt"
+    sink = make_sink(f"{workdir}/st")
+    spark = frame.sparkSession
+    for half in (F.col(id_col) <= mid, F.col(id_col) > mid):
+        # few source files per half: the stream lists and opens each
+        # file, and a test-sized half needs no wide write
+        frame.filter(half).coalesce(4).write.mode("append").parquet(src_dir)
+        (
+            spark.readStream.schema(frame.schema).parquet(src_dir)
+            .writeStream.foreachBatch(
+                (lambda b, bid: sink.apply_batch(b, bid, writer_id=ckpt))
+                if keyed else sink.apply_batch
+            )
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination(300)
+        )
+    return sink
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables: list[str] | None = None) -> None:

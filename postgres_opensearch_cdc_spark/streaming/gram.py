@@ -14,33 +14,32 @@ micro-batch that reaches the merge DOUBLE-COUNTS and the
 State is the fixed d(d+1)/2 upper-triangle doubles regardless of
 stream length — the mergeable-summary scale story again: per-batch
 cost is one Arrow-partial X^T X over the batch (kilobytes shuffled)
-plus an O(d²) merge, never a history rescan. Layout is a
-commits.CommitLog: full triangle into a fresh commit dir, ONE atomic
-manifest rename publishing {version, commit, batch_id, writer_id,
-dim}; crash before the rename leaves the previous version live, and
-dimension is validated on BOTH write and read (a mismatched-d reader
-would silently mis-index the triangle).
+plus an O(d²) merge, never a history rescan. The commit, the
+``sum`` merge and vacuum are streaming/summary.SummarySink's: full
+triangle into a fresh commit dir, ONE atomic manifest publishing
+{version, commit, batch_id, writer_id, dim}; crash before it leaves
+the previous version live, and dimension is validated on BOTH write
+and read (a mismatched-d reader would silently mis-index the
+triangle).
 
 Determinism: the only cross-split drift is float summation order
 (~1e-12 relative), far inside the 6-dp rounding the oracle entry
-(queries/training_pipeline11.embedding_gram_stream) applies — the
+(queries/training_pipeline12.embedding_gram_stream) applies — the
 batch SQL oracle knows nothing about the split.
 """
 
 from __future__ import annotations
 
-import os
-import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-from postgres_opensearch_cdc_spark.commits import CommitLog
 from postgres_opensearch_cdc_spark.queries.training_pipeline11 import (
     EMB_DIM,
     gram_upper,
 )
+from postgres_opensearch_cdc_spark.streaming.summary import SummarySink
 
 _GRAM_SCHEMA = T.StructType([
     T.StructField("i", T.IntegerType()),
@@ -50,71 +49,33 @@ _GRAM_SCHEMA = T.StructType([
 
 
 @dataclass
-class GramRollupSink:
+class GramRollupSink(SummarySink):
     """foreachBatch sink maintaining the upper-triangle Gram of an
     embedding stream; see the module docstring for the contract.
     ``vec_col`` names the batch's array<double> column (cast float32
     upstream — exact promotion — so every engine multiplies identical
     doubles)."""
 
-    path: str
     vec_col: str = "embedding"
     dim: int = EMB_DIM
 
-    @property
-    def log(self) -> CommitLog:
-        return CommitLog(self.path)
+    subdir = "gram"
+    schema = _GRAM_SCHEMA
+    merge = staticmethod(F.sum)
+    store = "gram store"
+    mismatch = "a mismatched dim mis-indexes the triangle"
 
-    def _check_dim(self, manifest: dict) -> None:
-        if manifest.get("dim") != self.dim:
-            raise ValueError(
-                f"gram store at {self.path} was written with "
-                f"dim={manifest.get('dim')}; this reader has "
-                f"dim={self.dim} — a mismatched dimension mis-indexes "
-                "the triangle"
-            )
+    def layout(self) -> dict:
+        return {"dim": self.dim}
 
-    def gram(self, spark: SparkSession) -> DataFrame:
-        """The published (i, j, gram_raw) upper triangle (empty before
-        the first commit). Read paths validate the dimension too."""
-        manifest = self.log.load()
-        if manifest is None:
-            return spark.createDataFrame([], _GRAM_SCHEMA)
-        self._check_dim(manifest)
-        return spark.read.schema(_GRAM_SCHEMA).parquet(
-            os.path.join(self.log.data_dir, manifest["commit"], "gram")
-        )
-
-    def apply_batch(self, batch: DataFrame, batch_id: int,
-                    writer_id: str | None = None) -> None:
-        spark = batch.sparkSession
-        log = self.log
-        manifest = log.load()
-        if log.replays(manifest, batch_id, writer_id):
-            return  # replay guard: MANDATORY — the merge below ADDS
-        if manifest is not None:
-            self._check_dim(manifest)
+    def partial(self, batch: DataFrame) -> DataFrame:
         # NO batch spread here (r14 final bench: the spread REGRESSED
         # this sink 1.97 -> 3.19 s): gram_upper emits d·(d+1)/2 partial
         # rows PER PARTITION, so repartitioning a small micro-batch to
         # session parallelism multiplies the reduce input ~8x while the
         # per-partition numpy fold is already trivial. A production
         # micro-batch arrives well-split from the source anyway.
-        partial = gram_upper(batch, dim=self.dim, vec_col=self.vec_col)
-        if manifest is not None:
-            partial = (
-                self.gram(spark)
-                .unionByName(partial)
-                .groupBy("i", "j")
-                .agg(F.sum("gram_raw").alias("gram_raw"))
-            )
-        commit = f"commit-{uuid.uuid4().hex[:12]}"
-        partial.write.mode("overwrite").parquet(
-            os.path.join(log.data_dir, commit, "gram")
-        )
-        log.commit(manifest, {
-            "commit": commit,
-            "batch_id": batch_id,
-            "writer_id": writer_id,
-            "dim": self.dim,
-        })
+        return gram_upper(batch, dim=self.dim, vec_col=self.vec_col)
+
+    # the published (i, j, gram_raw) upper triangle
+    gram = SummarySink.read

@@ -15,17 +15,19 @@ property by re-applying batches with a DIFFERENT writer_id and
 demanding a byte-identical register table (the test additive stores
 must fail without their guard).
 
-Layout (a commits.CommitLog):
-    <path>/data/<commit>/regs/   full (g, bucket, register) table
-    <path>/_commits/vNNNNNNNN.json  manifest {version, commit,
-                                    batch_id, writer_id, m}
-Each batch writes the merged register table into a fresh commit dir
-and publishes it with ONE atomic manifest rename — crash between data
+The commit, merge and vacuum steps are streaming/summary.SummarySink's
+(layout ``<path>/data/<commit>/regs/`` plus manifests carrying
+{version, commit, batch_id, writer_id, m}): each batch writes the
+merged register table (merge ``max``) into a fresh commit dir and
+publishes it with ONE atomic manifest write — crash between data
 write and manifest leaves the previous version live, and the replay
 re-derives an identical merge (idempotence again). The whole-table
 rewrite IS the scale path: the store is O(groups × m) int64s —
 independent of stream length — so per-batch cost is
 O(|batch| + |groups|·m) and never grows with history.
+
+CmsRollupSink below is the ADDITIVE contrast on the same base (merge
+``sum``), where the guard is mandatory.
 
 Determinism: registers come from functions/sketch.hll_registers
 (md5-backed hash60, pure int64), so the streamed store after any
@@ -35,20 +37,18 @@ value-checks stream ≡ batch through DuckDB."""
 
 from __future__ import annotations
 
-import os
-import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from postgres_opensearch_cdc_spark.commits import CommitLog
 from postgres_opensearch_cdc_spark.functions.sketch import (
     HLL_P,
     hll_estimates,
     hll_params,
     hll_registers,
 )
+from postgres_opensearch_cdc_spark.streaming.summary import SummarySink
 
 _REG_SCHEMA = T.StructType([
     T.StructField("g", T.StringType()),
@@ -67,7 +67,7 @@ _CMS_SCHEMA = T.StructType([
 
 
 @dataclass
-class HllRollupSink:
+class HllRollupSink(SummarySink):
     """foreachBatch sink maintaining per-group HLL registers; see the
     module docstring for the contract. ``group_col`` / ``value_col``
     name the batch columns; the value is hashed as a string (cast
@@ -75,63 +75,31 @@ class HllRollupSink:
     identical bytes in every engine). ``p`` is the register precision
     (default the test size; production 14 = 16 KiB/group — the int64
     exactness bound holds at every p, see functions/sketch.hll_params);
-    the store persists m in its manifests and refuses to merge a
-    mismatched precision."""
+    the store persists m in its manifests and refuses to merge or read
+    a mismatched precision (a default-p reader over a p=14 store would
+    otherwise compute zero_registers = 16 − count: nonsense, silently).
+    The replay guard is an optimization only: max is idempotent."""
 
-    path: str
     group_col: str = "g"
     value_col: str = "v"
     p: int = HLL_P
 
-    @property
-    def log(self) -> CommitLog:
-        return CommitLog(self.path)
+    subdir = "regs"
+    schema = _REG_SCHEMA
+    merge = staticmethod(F.max)
+    store = "register store"
+    mismatch = ("registers under different precisions neither merge "
+                "nor estimate")
 
-    def registers(self, spark: SparkSession) -> DataFrame:
-        """The published (g, bucket, register) table (empty before the
-        first commit). Read paths validate the precision too — a
-        default-p reader over a p=14 store would otherwise compute
-        zero_registers = 16 − count (nonsense) silently."""
-        manifest = self.log.load()
-        if manifest is None:
-            return spark.createDataFrame([], _REG_SCHEMA)
-        m = hll_params(self.p)[0]
-        if manifest.get("m") != m:
-            raise ValueError(
-                f"register store at {self.path} was written with "
-                f"m={manifest.get('m')}; this reader has m={m} — "
-                "estimates under a mismatched precision are garbage"
-            )
-        return spark.read.schema(_REG_SCHEMA).parquet(
-            os.path.join(self.log.data_dir, manifest["commit"], "regs")
-        )
+    def layout(self) -> dict:
+        return {"m": hll_params(self.p)[0]}
 
-    def estimates(self, spark: SparkSession) -> DataFrame:
-        """Per-group cardinality estimates over the published store
-        (functions/sketch.hll_estimates — the same estimator the
-        batch audit entry value-checks)."""
-        return hll_estimates(self.registers(spark), p=self.p)
-
-    def apply_batch(self, batch: DataFrame, batch_id: int,
-                    writer_id: str | None = None) -> None:
-        spark = batch.sparkSession
-        log = self.log
-        manifest = log.load()
-        if log.replays(manifest, batch_id, writer_id):
-            return  # replay: skipping is an optimization — the merge
-            # below would be a no-op anyway (max is idempotent)
-        m = hll_params(self.p)[0]
-        if manifest is not None and manifest.get("m") != m:
-            raise ValueError(
-                f"register store at {self.path} was written with "
-                f"m={manifest.get('m')}; this build has m={m} — "
-                "register layouts under different precisions do not merge"
-            )
+    def partial(self, batch: DataFrame) -> DataFrame:
         from postgres_opensearch_cdc_spark.functions.dedup import (
             _ensure_parallelism,
         )
 
-        regs = hll_registers(
+        return hll_registers(
             _ensure_parallelism(batch.select(
                 F.col(self.group_col).cast("string").alias("g"),
                 F.col(self.value_col).cast("string").alias("v"),
@@ -139,28 +107,20 @@ class HllRollupSink:
             group_col="g",
             value_col="v",
             p=self.p,
-        ).withColumn("register", F.col("register").cast("int"))
-        if manifest is not None:
-            regs = (
-                self.registers(spark)
-                .unionByName(regs)
-                .groupBy("g", "bucket")
-                .agg(F.max("register").alias("register"))
-            )
-        commit = f"commit-{uuid.uuid4().hex[:12]}"
-        regs.write.mode("overwrite").parquet(
-            os.path.join(log.data_dir, commit, "regs")
         )
-        log.commit(manifest, {
-            "commit": commit,
-            "batch_id": batch_id,
-            "writer_id": writer_id,
-            "m": m,
-        })
+
+    # the published (g, bucket, register) table
+    registers = SummarySink.read
+
+    def estimates(self, spark: SparkSession) -> DataFrame:
+        """Per-group cardinality estimates over the published store
+        (functions/sketch.hll_estimates — the same estimator the
+        batch audit entry value-checks)."""
+        return hll_estimates(self.registers(spark), p=self.p)
 
 
 @dataclass
-class CmsRollupSink:
+class CmsRollupSink(SummarySink):
     """foreachBatch sink maintaining a count-min sketch over a value
     stream — the ADDITIVE counterpart of HllRollupSink, and the
     deliberate contrast in streaming-sketch contracts: CM cells SUM
@@ -169,12 +129,11 @@ class CmsRollupSink:
     manifest guard is a CORRECTNESS requirement, not an optimization
     (the exact opposite of the register store's idempotent max; both
     properties are pinned side by side in tests/test_hll_stream.py).
-    Same commit protocol (commits.CommitLog): full grid into a fresh
-    commit dir, ONE atomic manifest rename; crash before the rename
-    leaves the previous version live and the replay re-derives and
-    publishes the same merge (the guard compares against the last
-    PUBLISHED manifest, so an unpublished crashed attempt is
-    invisible to it).
+    Same commit protocol (SummarySink): full grid into a fresh commit
+    dir, ONE atomic manifest write; crash before it leaves the
+    previous version live and the replay re-derives and publishes the
+    same merge (the guard compares against the last PUBLISHED
+    manifest, so an unpublished crashed attempt is invisible to it).
 
     State is the fixed depth x width grid regardless of stream length
     — the mergeable-summary scale story; estimates for any probe
@@ -184,39 +143,41 @@ class CmsRollupSink:
     production uses width >= 2^16 = 2 MiB/grid — error eps = e/width,
     cells stay far from int64 territory at any stream length) and is
     persisted in manifests: grids under different geometries refuse
-    to add."""
+    to add, and reads refuse too — a default-width reader over a
+    2^16-wide store would probe wrong buckets and could return
+    UNDER-estimates, silently breaking the one-sided contract.
+    Absent coordinates in the published grid are implicit zeros."""
 
-    path: str
     value_col: str = "v"
     depth: int = CMS_DEPTH
     width: int = CMS_WIDTH
 
-    @property
-    def log(self) -> CommitLog:
-        return CommitLog(self.path)
+    subdir = "cells"
+    schema = _CMS_SCHEMA
+    merge = staticmethod(F.sum)
+    store = "cm sketch store"
+    mismatch = ("a mismatched geometry probes wrong buckets, and grids "
+                "under different geometries do not add")
 
-    def cells(self, spark: SparkSession) -> DataFrame:
-        """The published (r, bucket, cell) grid (empty before the
-        first commit; absent coordinates are implicit zeros). Read
-        paths validate the geometry too — a default-width reader over
-        a 2^16-wide store would probe wrong buckets and could return
-        UNDER-estimates, silently breaking the one-sided contract."""
-        manifest = self.log.load()
-        if manifest is None:
-            return spark.createDataFrame([], _CMS_SCHEMA)
-        if (
-            manifest.get("depth") != self.depth
-            or manifest.get("width") != self.width
-        ):
-            raise ValueError(
-                f"cm sketch store at {self.path} was written as "
-                f"{manifest.get('depth')}x{manifest.get('width')}; this "
-                f"reader is {self.depth}x{self.width} — probes under a "
-                "mismatched geometry land on wrong buckets"
-            )
-        return spark.read.schema(_CMS_SCHEMA).parquet(
-            os.path.join(self.log.data_dir, manifest["commit"], "cells")
+    def layout(self) -> dict:
+        return {"depth": self.depth, "width": self.width}
+
+    def partial(self, batch: DataFrame) -> DataFrame:
+        from postgres_opensearch_cdc_spark.functions.dedup import (
+            _ensure_parallelism,
         )
+
+        return (
+            self.coords(
+                _ensure_parallelism(batch.select(self.value_col)),
+                self.value_col,
+            )
+            .groupBy("r", "bucket")
+            .agg(F.count(F.lit(1)).alias("cell"))
+        )
+
+    # the published (r, bucket, cell) grid
+    cells = SummarySink.read
 
     def coords(self, frame: DataFrame, value_col: str) -> DataFrame:
         """All ``depth`` (r, bucket) coordinates per row in ONE
@@ -259,57 +220,3 @@ class CmsRollupSink:
             .groupBy(value_col)
             .agg(F.min(F.coalesce("cell", F.lit(0))).alias("cm_est"))
         )
-
-    def apply_batch(self, batch: DataFrame, batch_id: int,
-                    writer_id: str | None = None) -> None:
-        spark = batch.sparkSession
-        log = self.log
-        manifest = log.load()
-        if log.replays(manifest, batch_id, writer_id):
-            return  # replay: MANDATORY skip — additive merge would
-            # double-count (see class docstring)
-        if manifest is not None and (
-            manifest.get("depth") != self.depth
-            or manifest.get("width") != self.width
-        ):
-            raise ValueError(
-                f"cm sketch store at {self.path} was written as "
-                f"{manifest.get('depth')}x{manifest.get('width')}; this "
-                f"build is {self.depth}x{self.width} — grids under "
-                "different geometries do not add"
-            )
-        from postgres_opensearch_cdc_spark.functions.dedup import (
-            _ensure_parallelism,
-        )
-
-        cells = (
-            self.coords(
-                _ensure_parallelism(batch.select(self.value_col)),
-                self.value_col,
-            )
-            .groupBy("r", "bucket")
-            .agg(F.count(F.lit(1)).alias("cell"))
-        )
-        if manifest is not None:
-            cells = (
-                self.cells(spark)
-                .unionByName(cells)
-                .groupBy("r", "bucket")
-                .agg(F.sum("cell").alias("cell"))
-            )
-        cells = cells.select(
-            F.col("r").cast("int"),
-            F.col("bucket").cast("long"),
-            F.col("cell").cast("long"),
-        )
-        commit = f"commit-{uuid.uuid4().hex[:12]}"
-        cells.write.mode("overwrite").parquet(
-            os.path.join(log.data_dir, commit, "cells")
-        )
-        log.commit(manifest, {
-            "commit": commit,
-            "batch_id": batch_id,
-            "writer_id": writer_id,
-            "depth": self.depth,
-            "width": self.width,
-        })

@@ -11,7 +11,7 @@ state is tiny (3 numbers per key) and lives in the RocksDB state store
 
 from __future__ import annotations
 
-from typing import Any, Iterator
+from typing import Iterator
 
 import pandas as pd
 

@@ -14,6 +14,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from postgres_opensearch_cdc_spark.commits import CommitLog
 from postgres_opensearch_cdc_spark.streaming.apply import (
     RollupSink,
     VersionedMirrorSink,
@@ -25,10 +26,6 @@ from postgres_opensearch_cdc_spark.streaming.sketch import (
 )
 
 DIM = 4
-
-
-def _one_commit(m):
-    return [m["commit"]]
 
 
 def _mirror(path):
@@ -72,7 +69,7 @@ def _gram(path):
         )
 
     return (sink, batch, lambda spark: sink.gram(spark),
-            lambda: sink.log.vacuum(1, _one_commit))
+            lambda: sink.vacuum(1))
 
 
 def _hll(path):
@@ -85,7 +82,7 @@ def _hll(path):
         )
 
     return (sink, batch, lambda spark: sink.registers(spark),
-            lambda: sink.log.vacuum(1, _one_commit))
+            lambda: sink.vacuum(1))
 
 
 def _cms(path):
@@ -97,7 +94,7 @@ def _cms(path):
         )
 
     return (sink, batch, lambda spark: sink.cells(spark),
-            lambda: sink.log.vacuum(1, _one_commit))
+            lambda: sink.vacuum(1))
 
 
 SINKS = {"mirror": _mirror, "rollup": _rollup, "gram": _gram,
@@ -160,3 +157,24 @@ def test_stray_temp_manifest_is_not_a_commit(spark, tmp_path, kind):
     for i in range(2):
         clean.apply_batch(clean_batch(spark, i), i, writer_id="w")
     assert _rows(read(spark)) == _rows(clean_read(spark))
+
+
+@pytest.mark.parametrize("kind", ["cms", "gram", "hll"])
+def test_summary_commit_reads_one_manifest(spark, tmp_path, monkeypatch,
+                                           kind):
+    """A summary commit merges the state of the manifest it publishes
+    on top of: it reads the log once, so a writer committing between
+    two reads cannot make the merged state and its base differ."""
+    sink, batch, _, _ = SINKS[kind](str(tmp_path / kind))
+    sink.apply_batch(batch(spark, 0), 0, writer_id="w")
+    loads = []
+    real_load = CommitLog.load
+
+    def counting_load(self, *args, **kwargs):
+        loads.append(args)
+        return real_load(self, *args, **kwargs)
+
+    monkeypatch.setattr(CommitLog, "load", counting_load)
+    sink.apply_batch(batch(spark, 1), 1, writer_id="w")
+    assert len(loads) == 1
+    assert sink.log.load()["version"] == 2
